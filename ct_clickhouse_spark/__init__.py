@@ -5,6 +5,8 @@ data-processing capabilities of the reference CT-log analytics platform
 Layout:
   session    — SparkSession factory tuned for columnar OLAP (AQE, Arrow, UTC)
   catalog    — explicit schemas + loaders for the fixture tables
+  artifacts  — the one registry of derived index state, keyed on the
+               state of the source files it was built from
   cert_domains — deterministic synthesis of the reference's one fact table
                  (reference: clickhouse/init.sql:3-18) from the fixtures
   api_queries  — the 8 reference REST query shapes (reference: api/app.py)

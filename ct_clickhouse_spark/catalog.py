@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from . import artifacts
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _f = StructField
@@ -140,144 +142,17 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def path_state(path: str) -> tuple:
-    """Cheap staleness fingerprint of a local table path (file OR
-    directory): (file count, total bytes, max mtime_ns). One os.stat per
-    file — the same contract as serving's `_dir_state` (serving/app.py):
-    a token that changes iff the file listing changed. Missing paths
-    fingerprint as (0, 0, 0) so a later write is always a change."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return (0, 0, 0)
-    if not os.path.isdir(path):
-        return (1, st.st_size, st.st_mtime_ns)
-    n = total = mx = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            try:
-                s = os.stat(os.path.join(root, fn))
-            except OSError:
-                continue
-            n += 1
-            total += s.st_size
-            mx = max(mx, s.st_mtime_ns)
-    return (n, total, mx)
-
-
-# TTL-memoized path_state dicts (keyed by sf_dir) registered by artifact
-# caches; invalidate_table clears them so in-ENGINE mutations (merge /
-# delete / compaction, which all route through invalidate_table) become
-# visible immediately, while out-of-band rewrites are detected within
-# the memo's TTL (r14 advice #3).
-_STATE_MEMOS: list[dict] = []
-
-
-def register_state_memo(memo: dict) -> dict:
-    _STATE_MEMOS.append(memo)
-    return memo
-
-
 def invalidate_table(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Drop every driver-side memo of one fixture table (logical-plan
-    cache, rowcount memo, and Spark's own cached listings/data for the
-    path) so the next load_table re-lists and re-reads. Called by
-    staleness-fingerprinted artifact caches when a path's `path_state`
-    changes (r13 verdict #5 — mutable table dirs must re-resolve)."""
-    key = (_session_key(spark), sf_dir, name)
-    _DF_CACHE.pop(key, None)
-    _ROWCOUNT_CACHE.pop(key, None)
-    for memo in _STATE_MEMOS:
-        memo.pop(sf_dir, None)
+    """An in-engine write to one fixture table landed: free every
+    artifact built from it and Spark's cached data for the path, so the
+    next load_table re-lists and re-reads at once instead of within the
+    registry's probe TTL."""
+    path = table_path(sf_dir, name)
+    artifacts.invalidate(path)
     try:
-        spark.catalog.refreshByPath(table_path(sf_dir, name))
+        spark.catalog.refreshByPath(path)
     except Exception:  # refresh is best-effort (connect-only sessions)
         pass
-
-
-# DataFrame-lineage cache: repeated load_table calls re-list files and
-# re-read footers on the driver (~50-100 ms each), which dominates small
-# interactive queries. The cached object is just the immutable logical
-# plan — no data is pinned. Keyed on the JVM application id (stable for a
-# session's lifetime, never reused within a JVM) rather than ``id(spark)``,
-# which CPython can recycle after GC and alias a fresh session.
-_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-# Artifact caches (persisted DataFrames, on-disk index dirs) pin REAL
-# resources, unlike _DF_CACHE's logical plans. They are bounded: inserting
-# past the cap evicts the oldest entry (dict preserves insertion order)
-# and calls ``release`` on it (unpersist / rmtree), so a long-lived
-# session sweeping many fixture dirs — scripts/stress_scaling.py builds
-# one per multiplier — cannot grow executor storage or /tmp monotonically.
-ARTIFACT_CACHE_MAX = 4
-
-
-def bounded_cache_put(cache: dict, key, value, release=None, max_entries: int = ARTIFACT_CACHE_MAX):
-    """Insert ``value`` under ``key``; evict (and ``release``) the oldest
-    entries beyond ``max_entries``. Mutates and returns ``value``.
-
-    Re-inserting an existing key moves it to the NEWEST position (r14
-    advice #4: a plain ``cache[key] = value`` on a present key keeps the
-    old insertion slot, so a staleness-refreshed entry sat oldest and
-    could be evicted immediately after being rebuilt, silently re-running
-    its construction pass on the next lookup)."""
-    cache.pop(key, None)
-    cache[key] = value
-    while len(cache) > max_entries:
-        old_key = next(iter(cache))
-        old = cache.pop(old_key)
-        if release is not None:
-            try:
-                release(old)
-            except Exception:  # releasing a stale artifact is best-effort
-                pass
-    return value
-
-
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint()ed frame's persisted RDD blocks eagerly.
-
-    Dataset.unpersist only clears CacheManager entries; a localCheckpoint
-    pins PERSISTED RDD BLOCKS, whose holder is the LogicalRDD's rdd —
-    reachable through the analyzed plan (r13 advice #3: the df.unpersist
-    release was a measured no-op on RDDStorageInfo; this empties it).
-    Falls back to GC-driven cleanup (ContextCleaner) when the JVM plan is
-    unreachable (connect-only sessions).
-
-    ONLY for frames whose data is KNOWN DEAD — staleness invalidation
-    (the source path changed) or session teardown. Never use it as a
-    capacity-eviction release for caches whose values callers may still
-    hold (r14 advice, medium): a checkpoint's lineage is truncated, so a
-    concurrently-held reference to an eagerly-freed frame fails at action
-    time with block-not-found and CANNOT recompute. Capacity eviction of
-    checkpointed frames must instead just DROP the reference: Python GC
-    detaches the py4j handle, and the JVM's ContextCleaner unpersists the
-    blocks once NO live reference (including in-flight jobs, which pin
-    the RDD through the DAG) can reach them — reachability is a free,
-    race-proof refcount."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # blocks are then freed by ContextCleaner on GC
-
-
-def _session_key(spark: SparkSession) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # pragma: no cover - connect-only sessions
-        # no sparkContext: tag the session object itself with a one-time
-        # uuid. Falling back to id(spark) would reintroduce the CPython
-        # id-recycling aliasing this key exists to avoid.
-        tag = getattr(spark, "_ct_cache_tag", None)
-        if tag is None:
-            import uuid
-
-            tag = uuid.uuid4().hex
-            try:
-                spark._ct_cache_tag = tag
-            except Exception:
-                return f"uuid:{tag}"  # untaggable: never cache-hit, still safe
-        return f"uuid:{tag}"
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
@@ -382,42 +257,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events`` additionally gets a physical-type-aware read (see
     ``_read_events``) because its nanos variant cannot be read at all
-    without a legacy conf."""
-    key = (_session_key(spark), sf_dir, name)
-    cached = _DF_CACHE.get(key)
-    if cached is not None:
-        return cached
-    if name == "events":
-        df = _read_events(spark, table_path(sf_dir, name))
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
-    df = _normalize(df, SCHEMAS[name])
-    _DF_CACHE[key] = df
-    return df
+    without a legacy conf. The resolved plan (no data) is a registry
+    entry keyed on the file's state: repeated calls skip the driver-side
+    listing and footer reads (~50-100 ms each) until the table changes."""
+    path = table_path(sf_dir, name)
 
+    def build() -> DataFrame:
+        df = _read_events(spark, path) if name == "events" else spark.read.parquet(path)
+        return _normalize(df, SCHEMAS[name])
 
-_ROWCOUNT_CACHE: dict[tuple[str, str, str], int] = {}
+    return artifacts.get_or_build(spark, "table", (sf_dir, name), build, deps=[path])
 
 
 def table_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Row count of a fixture table, memoized per (session, sf, table).
-
-    Fixture tables are immutable inputs, and several operators size
-    themselves from the corpus count (GEMM tile count, SemDeDup grid
-    bits, exact-vs-LSH routing) — re-running a count() job per
-    invocation is a redundant scan for a number that cannot change
-    (r7 verdict #7). The one count that does run resolves from parquet
-    footer metadata (aggregate pushdown), so even the miss is cheap."""
-    key = (_session_key(spark), sf_dir, name)
-    hit = _ROWCOUNT_CACHE.get(key)
-    if hit is None:
-        hit = load_table(spark, sf_dir, name).count()
-        # plain ints need no artifact-sized bound: ARTIFACT_CACHE_MAX=4
-        # is sized for checkpointed tables, and a session sweeping >4
-        # (sf, table) keys (one stress multiplier grid) would thrash
-        # this cache back into the per-invocation count jobs it removes
-        bounded_cache_put(_ROWCOUNT_CACHE, key, hit, max_entries=512)
-    return hit
+    """Row count of a fixture table, kept until the table changes.
+    Several operators size themselves from the corpus count (GEMM tile
+    count, SemDeDup grid bits, exact-vs-LSH routing); the count resolves
+    from parquet footer metadata (aggregate pushdown), so even a miss is
+    cheap."""
+    return artifacts.get_or_build(
+        spark,
+        "rowcount",
+        (sf_dir, name),
+        lambda: load_table(spark, sf_dir, name).count(),
+        deps=[table_path(sf_dir, name)],
+    )
 
 
 def register_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
@@ -434,14 +298,6 @@ def register_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = 
 # many-hundred-core cluster must NOT pay a payload shuffle just for
 # being narrower than the core count (r15 advice, medium).
 NARROW_SCAN_MAX_SPLITS = 2
-
-# Split-count memo per widened table, keyed sf_dir -> {(session, table):
-# n}. Registered as a state memo so in-engine mutations invalidate it;
-# fixture tables are immutable otherwise. Avoids re-running the
-# partition probe (one physical planning of the sub-frame) on every
-# query invocation (r15 verdict #9).
-_SCAN_WIDTH_MEMO: dict = {}
-register_state_memo(_SCAN_WIDTH_MEMO)
 
 
 def widen_narrow_scan(
@@ -463,8 +319,8 @@ def widen_narrow_scan(
     paid only where the near-serial alternative is strictly worse.
 
     ``table_key``: (sf_dir, table name) when ``df`` is the raw scan of a
-    fixture table — memoizes the split-count probe per (session, table
-    state) so the gate costs a dict lookup per call instead of one
+    fixture table — keeps the split-count probe in the registry until
+    the table changes, so the gate costs a lookup per call instead of one
     physical planning of the sub-frame. Sessions without the RDD API
     (Spark Connect) return ``df`` unchanged — the probe is impossible
     there and single-task execution is only a performance, not a
@@ -473,18 +329,19 @@ def widen_narrow_scan(
         target = spark.sparkContext.defaultParallelism
     except Exception:  # pragma: no cover - connect-only sessions
         return df
-    nparts = None
-    skey = _session_key(spark)
-    if table_key is not None:
-        sf_dir, name = table_key
-        nparts = _SCAN_WIDTH_MEMO.get(sf_dir, {}).get((skey, name))
-    if nparts is None:
-        try:
+    try:
+        if table_key is None:
             nparts = df.rdd.getNumPartitions()
-        except Exception:  # pragma: no cover - connect-only sessions
-            return df
-        if table_key is not None:
-            _SCAN_WIDTH_MEMO.setdefault(sf_dir, {})[(skey, name)] = nparts
+        else:
+            nparts = artifacts.get_or_build(
+                spark,
+                "scan_width",
+                table_key,
+                lambda: df.rdd.getNumPartitions(),
+                deps=[table_path(*table_key)],
+            )
+    except Exception:  # pragma: no cover - connect-only sessions
+        return df
     if nparts > NARROW_SCAN_MAX_SPLITS or nparts >= target:
         return df
     return df.repartition(target)

@@ -45,8 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..catalog import bounded_cache_put as _bounded_cache_put
-from ..catalog import load_table
+from .. import artifacts
+from ..catalog import load_table, table_path
 
 FRAME_BYTES = 256  # fake video "frame" size
 FRAME_STRIDE = 4  # sample every 4th frame
@@ -447,9 +447,6 @@ def _wav_payload_udf(text: pd.Series, media_id: pd.Series) -> pd.Series:
 # would re-encode. Persist once per (session, sf) — the in-memory analog
 # of the physical media table a real pipeline stores (same precedent as
 # the cached cert_domains fact table).
-_MEDIA_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic media table from documents. Every format row carries
     a REAL container built from the text bytes: png via ``png_encode``
@@ -459,12 +456,16 @@ def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     via ``wav_encode`` (sample rate from media_id), mp4 via
     ``mp4_encode`` (duration = media_id % 30 + 1 s). Metadata derives
     from doc_id so both engines can reconstruct it."""
-    from ..catalog import _session_key
+    return artifacts.get_or_build(
+        spark,
+        "media",
+        sf_dir,
+        lambda: _encode_media(spark, sf_dir),
+        deps=[table_path(sf_dir, "documents")],
+    )
 
-    ckey = (_session_key(spark), sf_dir)
-    hit = _MEDIA_CACHE.get(ckey)
-    if hit is not None:
-        return hit
+
+def _encode_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import default_parallelism
 
     # encode parallelism must not depend on the input's row-group layout:
@@ -516,7 +517,7 @@ def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest = base.filter(
         ~F.col("format").isin("png", "jpeg", "wav", "mp4")
     ).withColumn("payload", F.encode("text", "utf-8"))
-    media = (
+    return (
         png.unionByName(jpeg)
         .unionByName(wav)
         .unionByName(mp4)
@@ -524,8 +525,6 @@ def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("text")
         .persist()
     )
-    _bounded_cache_put(_MEDIA_CACHE, ckey, media, release=lambda v: v.unpersist())
-    return media
 
 
 def media_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,8 +637,6 @@ def decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_decode, DECODE_SCHEMA)
 
 
-_RESIZE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 RESIZE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -715,17 +712,19 @@ def resize_media(
     # pipeline materializes them once per corpus snapshot; queries read
     # the thumbnail table, they don't re-decode the corpus) — same
     # per-(session, sf) lifecycle as the media table and signatures
-    from ..catalog import _session_key
-
-    ckey = (_session_key(spark), sf_dir)
-    hit = _RESIZE_CACHE.get(ckey)
-    if hit is not None:
-        return hit
-    out = out.persist()
-    out.count()
-    return _bounded_cache_put(
-        _RESIZE_CACHE, ckey, out, release=lambda v: v.unpersist()
+    return artifacts.get_or_build(
+        spark,
+        "thumbnails",
+        sf_dir,
+        lambda: _persisted(out),
+        deps=[table_path(sf_dir, "documents")],
     )
+
+
+def _persisted(df: DataFrame) -> DataFrame:
+    df = df.persist()
+    df.count()
+    return df
 
 
 FRAME_SCHEMA = StructType(
@@ -920,9 +919,6 @@ def dhash64(img) -> int:
     return _to_i64(bits)
 
 
-_SIGNATURE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def image_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, format, phash, dhash) for every decodable image in the
     media table — png via png_decode_pixels, jpeg via the real baseline
@@ -931,13 +927,7 @@ def image_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     DCT kernel is the expensive step and every consumer (signature rows,
     band-join pairs, groups) reads the same deterministic table — the
     same persisted-artifact lifecycle as the media table itself."""
-    from ..catalog import _session_key
     from ..functions.jpeg import jpeg_decode_gray
-
-    ckey = (_session_key(spark), sf_dir)
-    hit = _SIGNATURE_CACHE.get(ckey)
-    if hit is not None:
-        return hit
 
     def _sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -963,15 +953,16 @@ def image_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=[f.name for f in PHASH_SCHEMA.fields])
 
-    media = (
-        build_media(spark, sf_dir)
-        .filter(F.col("kind") == "image")
-        .select("media_id", "format", "payload")
-    )
-    sigs = media.mapInPandas(_sign, PHASH_SCHEMA).persist()
-    sigs.count()  # eager, like every sibling artifact cache
-    return _bounded_cache_put(
-        _SIGNATURE_CACHE, ckey, sigs, release=lambda v: v.unpersist()
+    def build() -> DataFrame:
+        media = (
+            build_media(spark, sf_dir)
+            .filter(F.col("kind") == "image")
+            .select("media_id", "format", "payload")
+        )
+        return _persisted(media.mapInPandas(_sign, PHASH_SCHEMA))
+
+    return artifacts.get_or_build(
+        spark, "image_signatures", sf_dir, build, deps=[table_path(sf_dir, "documents")]
     )
 
 
@@ -1157,19 +1148,11 @@ AFP_SCHEMA = StructType(
     [StructField("media_id", LongType()), StructField("afp", LongType())]
 )
 
-_AFP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def audio_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, afp) for every decodable audio clip in the media table
     — REAL PCM decode (wav_decode_samples) + the spectral-sign kernel.
     Cached per (session, sf) like the image signatures."""
-    from ..catalog import _session_key
-
-    ckey = (_session_key(spark), sf_dir)
-    hit = _AFP_CACHE.get(ckey)
-    if hit is not None:
-        return hit
 
     def _sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1183,15 +1166,16 @@ def audio_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=["media_id", "afp"])
 
-    media = (
-        build_media(spark, sf_dir)
-        .filter(F.col("kind") == "audio")
-        .select("media_id", "payload")
-    )
-    sigs = media.mapInPandas(_sign, AFP_SCHEMA).persist()
-    sigs.count()
-    return _bounded_cache_put(
-        _AFP_CACHE, ckey, sigs, release=lambda v: v.unpersist()
+    def build() -> DataFrame:
+        media = (
+            build_media(spark, sf_dir)
+            .filter(F.col("kind") == "audio")
+            .select("media_id", "payload")
+        )
+        return _persisted(media.mapInPandas(_sign, AFP_SCHEMA))
+
+    return artifacts.get_or_build(
+        spark, "audio_signatures", sf_dir, build, deps=[table_path(sf_dir, "documents")]
     )
 
 
@@ -1219,44 +1203,24 @@ def audio_near_dup_groups(
     )
 
 
-_PERCEPTUAL_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
-def perceptual_near_dups_cached(
+def perceptual_near_dups(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(image pairs, image converged group labels, audio pairs) per
-    (session, sf), each materialized ONCE via localCheckpoint — the same
-    maintained-artifact lifecycle as the ngram pair/label cache
-    (dedup.py): the band-join and the label-propagation rounds converge
-    to a fixed point for a fixed corpus, so re-running them on every
-    driver invocation of the lsh-pairs slot bought nothing. Capacity
-    eviction drops the reference only — ContextCleaner frees the
-    checkpoint blocks once no holder (caller or in-flight job) can reach
-    them (r14 advice, medium: eager release broke still-held references
-    unrecoverably; see catalog.release_local_checkpoint)."""
-    from ..catalog import _session_key, bounded_cache_put
+    """(image pairs, image group labels, audio pairs) over the persisted
+    signatures. The image pairs are checkpointed inside the call: the
+    lsh-pairs slot reads them twice (its pair rows, and label
+    propagation's edges), and lazy lineage would re-run the band-join
+    for each read."""
     from .similarity import label_propagate
 
-    key = (_session_key(spark), sf_dir)
-    hit = _PERCEPTUAL_CACHE.get(key)
-    if hit is not None:
-        return hit
     sigs = image_signatures(spark, sf_dir)
     ph_pairs = image_near_dup_pairs(sigs).localCheckpoint(eager=True)
-    ids = sigs.select(F.col("media_id").alias("id"))
     ph_labels = label_propagate(
-        ids,
+        sigs.select(F.col("media_id").alias("id")),
         ph_pairs.select(F.col("media_a").alias("id_a"), F.col("media_b").alias("id_b")),
-    ).localCheckpoint(eager=True)
-    afp_pairs = audio_near_dup_pairs(
-        audio_signatures(spark, sf_dir)
-    ).localCheckpoint(eager=True)
-    return bounded_cache_put(
-        _PERCEPTUAL_CACHE,
-        key,
-        (ph_pairs, ph_labels, afp_pairs),
     )
+    afp_pairs = audio_near_dup_pairs(audio_signatures(spark, sf_dir))
+    return ph_pairs, ph_labels, afp_pairs
 
 
 QUERIES = {

@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from .. import artifacts
+from ..catalog import load_table, table_path
 from ..session import default_parallelism
 
 # Tiny in-query stopword lists for the language-ID heuristic.
@@ -601,22 +602,18 @@ def fingerprint_and_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The merge table is k tuples of driver-held strings — tiny — but the
 # TRAINING is k distributed rounds; cache per (session, sf) like the
 # centroid trainer.
-_BPE_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _bpe_merges_cached(spark: SparkSession, sf_dir: str) -> list:
-    from ..catalog import _session_key, bounded_cache_put
-
     from .sampling import hash_sample
 
-    key = (_session_key(spark), sf_dir)
-    hit = _BPE_CACHE.get(key)
-    if hit is None:
-        sample = hash_sample(
-            load_table(spark, sf_dir, "documents"), "doc_id", BPE_SAMPLE
-        )
-        hit = bounded_cache_put(_BPE_CACHE, key, bpe_train(sample))
-    return hit
+    return artifacts.get_or_build(
+        spark,
+        "bpe_merges",
+        sf_dir,
+        lambda: bpe_train(
+            hash_sample(load_table(spark, sf_dir, "documents"), "doc_id", BPE_SAMPLE)
+        ),
+        deps=[table_path(sf_dir, "documents")],
+    )
 
 
 TOP_TERMS = 3
@@ -989,8 +986,6 @@ def train_bigram_lm(
     return c12, v
 
 
-_LM_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
-
 # Inline-map gate (r15 optimization): an LM whose bigram table has at most
 # this many entries is scored through two FOLDED MAP LITERALS inside the
 # document projection instead of the explode + 2 broadcast joins + per-doc
@@ -1005,16 +1000,6 @@ _LM_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
 # equal by tests/test_text.py::test_lm_inline_matches_join_path.
 LM_INLINE_MAX_ENTRIES = 2048
 
-# (m12 map Column, m1 map Column) per (session, sf, lm identity) — built
-# once from the persisted c12 artifact iff it passes the gate; a None
-# entry memoizes "too big (or unencodable), use the join path". The lm
-# identity (id of the c12 frame + V) is part of the key (r15 advice): a
-# retrained artifact is a NEW DataFrame object, so its maps can never be
-# served from the previous artifact's entry. (id() recycling can only
-# alias two artifacts of the SAME immutable (session, sf) corpus, whose
-# maps are identical by construction.)
-_LM_MAPS_CACHE: dict[tuple, tuple | None] = {}
-
 # Each lookup table is ONE string literal parsed by a foldable str_to_map
 # — not a map_from_arrays over per-entry literals, which costs one py4j
 # round trip AND one expression node per entry, turning every plan build
@@ -1026,17 +1011,26 @@ _LM_SEP_PAIR = "\x1e"
 _LM_SEP_KV = "\x1f"
 
 
-def _lm_maps(spark: SparkSession, sf_dir: str, lm: tuple[DataFrame, int]):
-    """Literal lookup-map COLUMNS for the inline scoring path, or None
-    when the LM is past LM_INLINE_MAX_ENTRIES (driver + plan size stay
-    bounded: the collect is gated BEFORE it runs) or a key contains the
-    encoding separators (the join path then guarantees correctness)."""
-    from ..catalog import _session_key, bounded_cache_put
+def _bigram_lm(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, tuple | None]:
+    """(c12, V, inline maps) of the LM trained on the ``lang = LM_LANG``
+    slice — one registry entry per (session, sf), so the maps are built
+    once from the persisted c12 table and can never outlive it."""
 
-    c12, _v = lm
-    key = (_session_key(spark), sf_dir, id(c12), _v)
-    if key in _LM_MAPS_CACHE:
-        return _LM_MAPS_CACHE[key]
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        c12, v = train_bigram_lm(docs.filter(F.col("lang") == LM_LANG))
+        return c12, v, _lm_maps(c12)
+
+    return artifacts.get_or_build(
+        spark, "bigram_lm", sf_dir, build, deps=[table_path(sf_dir, "documents")]
+    )
+
+
+def _lm_maps(c12: DataFrame):
+    """Literal lookup-map COLUMNS (m12, m1) for the inline scoring path,
+    or None when the LM is past LM_INLINE_MAX_ENTRIES (driver + plan size
+    stay bounded: the collect is gated BEFORE it runs) or a key contains
+    the encoding separators (the join path then guarantees correctness)."""
     maps = None
     if 0 < c12.count() <= LM_INLINE_MAX_ENTRIES:
         rows = c12.collect()
@@ -1057,7 +1051,7 @@ def _lm_maps(spark: SparkSession, sf_dir: str, lm: tuple[DataFrame, int]):
                 F.str_to_map(F.lit(s), F.lit(_LM_SEP_PAIR), F.lit(_LM_SEP_KV))
                 for s in (m12_str, m1_str)
             )
-    return bounded_cache_put(_LM_MAPS_CACHE, key, maps, max_entries=16)
+    return maps
 
 
 def _lm_encs(bigrams_col, maps: tuple):
@@ -1139,21 +1133,10 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, sf)). Small LMs (<= LM_INLINE_MAX_ENTRIES bigrams) score
     through the inline literal-map projection — one scan, zero
     exchanges; larger LMs take lm_score's join path."""
-    from ..catalog import _session_key, bounded_cache_put
-
     docs = load_table(spark, sf_dir, "documents")
-    key = (_session_key(spark), sf_dir)
-    lm = _LM_CACHE.get(key)
-    if lm is None:
-        lm = bounded_cache_put(
-            _LM_CACHE,
-            key,
-            train_bigram_lm(docs.filter(F.col("lang") == LM_LANG)),
-            release=lambda val: val[0].unpersist(),
-        )
-    maps = _lm_maps(spark, sf_dir, lm)
+    c12, v, maps = _bigram_lm(spark, sf_dir)
     if maps is None:
-        return lm_score(docs, lm=lm)
+        return lm_score(docs, lm=(c12, v))
     from ..catalog import widen_narrow_scan
 
     with_encs = widen_narrow_scan(
@@ -1162,7 +1145,7 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         _lm_encs(_bigram_strings(_words(F.col("text"))), maps).alias("_encs"),
     )
-    cols = _lm_agg_cols(F.col("_encs"), lm[1])
+    cols = _lm_agg_cols(F.col("_encs"), v)
     return with_encs.select(
         "doc_id", cols["n_bigrams"], cols["sum_c12"], cols["n_oov"], cols["bigram_nll"]
     )
@@ -1554,27 +1537,16 @@ def doc_profile_with_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the profile subtree; plans/r15/text_doc_profile_*.txt). Large LMs
     # (past LM_INLINE_MAX_ENTRIES) keep the join shape — the path
     # decontamination uses.
-    from ..catalog import _session_key, bounded_cache_put
-
     docs_raw = load_table(spark, sf_dir, "documents")
-    lm_key = (_session_key(spark), sf_dir)
-    lm = _LM_CACHE.get(lm_key)
-    if lm is None:
-        lm = bounded_cache_put(
-            _LM_CACHE,
-            lm_key,
-            train_bigram_lm(docs_raw.filter(F.col("lang") == LM_LANG)),
-            release=lambda val: val[0].unpersist(),
-        )
-    maps = _lm_maps(spark, sf_dir, lm)
+    c12, v, maps = _bigram_lm(spark, sf_dir)
     scored = scored.withColumn("pred_lang", pred)
     if maps is None:
-        joined = scored.join(lm_score(docs_raw, lm=lm), "doc_id", "left").drop("_bg")
+        joined = scored.join(lm_score(docs_raw, lm=(c12, v)), "doc_id", "left").drop("_bg")
     else:
         # _encs gets its own Project before the four lm columns read it —
         # see _lm_encs's re-evaluation note
         with_encs = scored.withColumn("_encs", _lm_encs(F.col("_bg"), maps))
-        joined = with_encs.withColumns(_lm_agg_cols(F.col("_encs"), lm[1])).drop(
+        joined = with_encs.withColumns(_lm_agg_cols(F.col("_encs"), v)).drop(
             "_bg", "_encs"
         )
     # quality_filter rides the same pipeline (text carried through the

@@ -15,6 +15,7 @@ Design notes (100 TB mindset, tested on local[N]):
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -45,6 +46,7 @@ def run_in_scheduler_pool(spark: SparkSession, pool: str, fn, *args):
 
 
 _SMALL_SESSION_CACHE: dict[tuple[str, int], SparkSession] = {}
+_SMALL_SESSION_LOCK = threading.Lock()
 
 
 def get_small_job_session(
@@ -64,23 +66,27 @@ def get_small_job_session(
     run CONCURRENTLY with corpus-sized jobs on the main session (FAIR
     scheduler) — the per-workload-SQLConf pattern
     ``SparkSession.newSession`` exists for.
-    Cached per (parent session, width) — keyed like the catalog's
-    artifact caches (``id(spark)`` would alias a new session allocated
-    at a recycled address after the old one is collected), with
+    Cached per (parent session, width) — keyed like the artifact
+    registry (``id(spark)`` would alias a new session allocated at a
+    recycled address after the old one is collected), with
     ``partitions`` in the key so callers asking for different widths
     get distinct clones rather than whichever width was requested
-    first. Bounded like every sibling cache: a process cycling
-    get_spark()/stop() must not pin one dead clone per applicationId
-    forever (a clone holds JVM-side SessionState via py4j)."""
-    from .catalog import _session_key, bounded_cache_put
+    first. Bounded: a process cycling get_spark()/stop() must not pin
+    one dead clone per applicationId forever (a clone holds JVM-side
+    SessionState via py4j). A session is not state derived from source
+    files, so it stays out of the registry."""
+    from .artifacts import session_key
 
-    key = (_session_key(spark), int(partitions))
-    hit = _SMALL_SESSION_CACHE.get(key)
-    if hit is not None:
-        return hit
-    clone = spark.newSession()
-    clone.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    return bounded_cache_put(_SMALL_SESSION_CACHE, key, clone)
+    key = (session_key(spark), int(partitions))
+    with _SMALL_SESSION_LOCK:
+        clone = _SMALL_SESSION_CACHE.get(key)
+        if clone is None:
+            clone = spark.newSession()
+            clone.conf.set("spark.sql.shuffle.partitions", str(partitions))
+            _SMALL_SESSION_CACHE[key] = clone
+            if len(_SMALL_SESSION_CACHE) > 4:  # drop the oldest clone
+                del _SMALL_SESSION_CACHE[next(iter(_SMALL_SESSION_CACHE))]
+    return clone
 
 
 def get_spark(

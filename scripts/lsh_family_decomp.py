@@ -66,7 +66,7 @@ def run_families(spark, sf_dir: str) -> dict:
         doc_minhash_lsh_pairs,
     )
     from ct_clickhouse_spark.operators.multimodal import (
-        perceptual_near_dups_cached,
+        perceptual_near_dups,
     )
     from ct_clickhouse_spark.operators.similarity import (
         embedding_incremental_pairs,
@@ -99,7 +99,7 @@ def run_families(spark, sf_dir: str) -> dict:
 
     def media_families():
         t0 = time.time()
-        ph_pairs, ph_labels, afp_pairs = perceptual_near_dups_cached(
+        ph_pairs, ph_labels, afp_pairs = perceptual_near_dups(
             spark, sf_dir
         )
         n = ph_pairs.count() + ph_labels.count() + afp_pairs.count()

@@ -193,9 +193,8 @@ def main() -> None:
         )
         n_emb = emb_for_gemm.count()
         results.setdefault("gemm_blocks", {})[k] = _gemm_blocks(n_emb)
-        # pass blocks explicitly: the auto-sized call persists its result
-        # in _PAIRS_CACHE, so the timed re-run would measure a cached-scan,
-        # not the n^2*d kernel this row exists to measure
+        # pass the block count explicitly so the row times the n^2*d
+        # kernel at the same tiling the auto-sized call would pick
         n_blocks = _gemm_blocks(n_emb)
         timed("gemm_pairs", k, lambda: cosine_pairs(spark, gemm_dir, blocks=n_blocks)
             .agg(F.count(F.lit(1)))

@@ -1,12 +1,12 @@
-"""Staleness enforcement for the embedding-derived serving caches (r13
-verdict #5): _QVEC_CACHE / _SQ8_CACHE / _SQ8_SERVING_CACHE were keyed on
-(session, sf_dir) under a DOCUMENTED immutable-fixture assumption; they
-now carry the `path_state` fingerprint of the embeddings path and
-re-resolve when a rewrite lands. These tests rewrite an embedding dir in
-place and observe the re-resolution — without the fingerprint they fail
-by serving the stale vector.
+"""Staleness, bound and release rules of the artifact registry
+(ct_clickhouse_spark/artifacts.py). Every entry carries the `path_state`
+of the source files it was built from and re-resolves when a rewrite
+lands. These tests rewrite a table in place — embeddings for the serving
+state; documents, by appending a part file, for table plans, row counts
+and an operator artifact — and observe the re-resolution; without the
+fingerprint they fail by serving the stale vector, count or frame.
 
-Also pins catalog.release_local_checkpoint (r13 advice #3): the old
+Also pins artifacts.release_local_checkpoint (r13 advice #3): the old
 `df.unpersist()` release was a measured no-op on a localCheckpoint'ed
 frame's RDD blocks; the plan-rdd unpersist actually empties storage.
 """
@@ -14,6 +14,8 @@ frame's RDD blocks; the plan-rdd unpersist actually empties storage.
 from __future__ import annotations
 
 import os
+import sys
+import threading
 import time
 
 import pyarrow as pa
@@ -41,13 +43,38 @@ def _write_embeddings(path: str, scale: float) -> None:
     # even on coarse-mtime filesystems by nudging the clock forward
     now = time.time() + 2
     os.utime(os.path.join(path, "embeddings.parquet"), (now, now))
+    _outlast_probe_ttl()
+
+
+def _outlast_probe_ttl() -> None:
     # out-of-band rewrites (not routed through invalidate_table) are
     # detected within the TTL of the memoized fingerprint (r14 advice
     # #3 made path_state amortized); wait it out so re-resolution is
     # deterministic here
-    from ct_clickhouse_spark.operators.similarity import _EMB_STATE_TTL_S
+    from ct_clickhouse_spark.artifacts import STATE_TTL_S
 
-    time.sleep(_EMB_STATE_TTL_S + 0.05)
+    time.sleep(STATE_TTL_S + 0.05)
+
+
+def _append_documents(path: str, start: int, n: int) -> None:
+    """Land one more part file in the directory-shaped documents table,
+    like an ingest appending to it: a plan that kept its old file
+    listing misses the new rows."""
+    ids = list(range(start, start + n))
+    texts = [f"doc number {i} says hello" for i in ids]
+    t = pa.table(
+        {
+            "doc_id": pa.array(ids, pa.int64()),
+            "text": pa.array(texts, pa.string()),
+            "lang": pa.array(["en"] * n, pa.string()),
+            "source": pa.array(["web"] * n, pa.string()),
+            "n_chars": pa.array([len(x) for x in texts], pa.int64()),
+        }
+    )
+    table_dir = os.path.join(path, "documents.parquet")
+    os.makedirs(table_dir, exist_ok=True)
+    pq.write_table(t, os.path.join(table_dir, f"part-{start}.parquet"))
+    _outlast_probe_ttl()
 
 
 @pytest.fixture()
@@ -103,22 +130,61 @@ def test_sq8_cached_reresolves_after_rewrite(spark, emb_dir):
     assert scales2[0] == pytest.approx(10.0 / math.sqrt(101.0), rel=1e-3)
 
 
+def _qvec_map(spark, emb_dir):
+    from ct_clickhouse_spark import artifacts
+    from ct_clickhouse_spark.catalog import table_path
+
+    return artifacts.get_or_build(
+        spark,
+        "query_vectors",
+        emb_dir,
+        lambda: pytest.fail("no query-vector entry in the registry"),
+        deps=[table_path(emb_dir, "embeddings")],
+    )
+
+
 def test_unchanged_path_is_a_cache_hit(spark, emb_dir):
     from ct_clickhouse_spark.operators import similarity as S
 
     S._query_vector(spark, emb_dir, 1)
-    from ct_clickhouse_spark.catalog import _session_key
-
-    per = S._QVEC_CACHE[(_session_key(spark), emb_dir)]
-    assert 1 in per["vecs"]
-    # same fingerprint -> the dict object survives the second lookup
+    per = _qvec_map(spark, emb_dir)
+    assert 1 in per
+    # same fingerprint -> the map object survives the second lookup
     S._query_vector(spark, emb_dir, 2)
-    assert per is S._QVEC_CACHE[(_session_key(spark), emb_dir)]
-    assert {1, 2} <= set(per["vecs"])
+    assert per is _qvec_map(spark, emb_dir)
+    assert {1, 2} <= set(per)
+
+
+def test_table_plan_and_rowcount_reresolve_after_rewrite(spark, tmp_path):
+    from ct_clickhouse_spark.catalog import load_table, table_rowcount
+
+    d = str(tmp_path / "sf_docs")
+    _append_documents(d, 0, 5)
+    assert table_rowcount(spark, d, "documents") == 5
+    assert load_table(spark, d, "documents").count() == 5
+    _append_documents(d, 5, 3)
+    assert table_rowcount(spark, d, "documents") == 8, (
+        "stale row count served after the documents file changed"
+    )
+    assert load_table(spark, d, "documents").count() == 8, (
+        "stale table plan served after the documents file changed"
+    )
+
+
+def test_operator_artifact_reresolves_after_rewrite(spark, tmp_path):
+    from ct_clickhouse_spark.operators.multimodal import build_media
+
+    d = str(tmp_path / "sf_media")
+    _append_documents(d, 0, 5)
+    assert build_media(spark, d).count() == 5
+    _append_documents(d, 5, 3)
+    assert build_media(spark, d).count() == 8, (
+        "stale persisted media table served after the documents file changed"
+    )
 
 
 def test_release_local_checkpoint_frees_blocks(spark):
-    from ct_clickhouse_spark.catalog import release_local_checkpoint
+    from ct_clickhouse_spark.artifacts import release_local_checkpoint
 
     def storage_ids() -> set[int]:
         return {
@@ -135,39 +201,131 @@ def test_release_local_checkpoint_frees_blocks(spark):
     )
 
 
-def test_bounded_cache_put_reinsert_moves_to_newest():
-    # r14 advice #4: assigning over a present key must refresh its
-    # insertion-order slot, or a staleness-refreshed entry sits oldest
-    # and is evicted right after being rebuilt
-    from ct_clickhouse_spark.catalog import bounded_cache_put
+def test_restale_entry_moves_to_newest(spark, tmp_path, monkeypatch):
+    # r14 advice #4: a staleness-refreshed entry must take the NEWEST
+    # slot, or it sits oldest and is evicted right after being rebuilt.
+    # Also the two release rules: staleness runs the release, capacity
+    # eviction does not.
+    from ct_clickhouse_spark import artifacts
 
-    cache: dict = {}
+    monkeypatch.setattr(artifacts, "ARTIFACT_CACHE_MAX", 4)
+    monkeypatch.setattr(artifacts, "STATE_TTL_S", 0.0)
+    artifacts.clear()
+    src = {k: str(tmp_path / k) for k in "abcde"}
     released: list = []
+
+    def put(k, v):
+        return artifacts.get_or_build(
+            spark, "t", k, lambda: v, deps=[src[k]], release=released.append
+        )
+
     for k in "abcd":
-        bounded_cache_put(cache, k, k, release=released.append, max_entries=4)
-    bounded_cache_put(cache, "a", "a2", release=released.append, max_entries=4)
-    bounded_cache_put(cache, "e", "e", release=released.append, max_entries=4)
-    assert released == ["b"], "re-inserted key was not moved to newest"
-    assert list(cache) == ["c", "d", "a", "e"]
-    assert cache["a"] == "a2"
+        put(k, k)
+    with open(src["a"], "w") as f:  # "a" goes stale
+        f.write("changed")
+    assert put("a", "a2") == "a2"
+    put("e", "e")
+    assert released == ["a"], "stale entry not released, or eviction released"
+    assert [key[2] for key in artifacts._ENTRIES] == ["c", "d", "a", "e"]
+    artifacts.clear()
 
 
-def test_evicted_checkpoint_frame_still_usable_by_held_reference(spark):
+def test_evicted_checkpoint_frame_still_usable_by_held_reference(spark, tmp_path):
     # r14 advice, medium: capacity eviction of a localCheckpoint-backed
     # artifact must NOT eagerly free its blocks — a still-held reference
     # (e.g. a concurrent bench thread) would fail at action time with
     # block-not-found, unrecoverably (truncated lineage). Eviction drops
     # the reference; ContextCleaner frees blocks by reachability.
-    from ct_clickhouse_spark.catalog import ARTIFACT_CACHE_MAX
+    from ct_clickhouse_spark import artifacts
     from ct_clickhouse_spark.operators import relational as R
 
-    R._BOUNDS_CACHE.clear()
+    source = str(tmp_path / "t")
     base = spark.range(2_000).selectExpr("id % 7 AS g", "CAST(id AS DOUBLE) AS v")
-    held = R._group_bounds(base, "g", "v", 4, cache_key=("t", "held"))
+    held = R._group_bounds(base, "g", "v", 4, source=source)
     n_before = held.count()  # (sampled sketch: group count may be < 7)
-    for i in range(ARTIFACT_CACHE_MAX + 2):  # sweep the held entry out
-        R._group_bounds(base, "g", "v", 4, cache_key=("t", f"fill{i}"))
-    assert ("t", "held") not in R._BOUNDS_CACHE
+    for i in range(artifacts.ARTIFACT_CACHE_MAX):  # sweep the held entry out
+        artifacts.get_or_build(spark, "fill", i, lambda: i)
+    assert (
+        artifacts.get_or_build(
+            spark, "quantile_bounds", (source, "g", "v", 4), lambda: None,
+            deps=[source],
+        )
+        is None
+    ), "held entry was not evicted"
     assert held.count() == n_before, (
         "held reference to an evicted checkpointed boundary frame broke"
     )
+
+
+def _run_threads(worker, n: int) -> None:
+    """Run ``worker(i)`` on n threads (more than the cores) with a short
+    switch interval, so evictions interleave."""
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads), "a worker hung"
+
+
+def test_concurrent_inserts_past_the_bound(spark, monkeypatch):
+    # many threads insert past the bound under concurrent lookups: no
+    # double eviction may raise, and the bound holds
+    from ct_clickhouse_spark import artifacts
+
+    monkeypatch.setattr(artifacts, "ARTIFACT_CACHE_MAX", 8)
+    errors: list = []
+
+    def worker(seed: int) -> None:
+        try:
+            for i in range(300):
+                k = (seed * 7919 + i * 31) % 64
+                artifacts.get_or_build(spark, "race", k, lambda: k)
+        except Exception as e:  # noqa: BLE001 - the assertion reports it
+            errors.append(e)
+
+    _run_threads(worker, 16)
+    assert not errors, errors[:3]
+    assert len(artifacts._ENTRIES) <= 8
+    artifacts.clear()
+
+
+class _OneRowFrame:
+    """Stands in for the embeddings scan so lookups miss fast."""
+
+    embedding = [0.0]
+
+    def filter(self, _cond):
+        return self
+
+    def select(self, *_cols):
+        return self
+
+    def collect(self):
+        return [self]
+
+
+def test_concurrent_query_vectors_past_the_bound(spark, emb_dir, monkeypatch):
+    # the per-id map inside the query-vector entry: concurrent /similar
+    # requests insert and evict together
+    from ct_clickhouse_spark.operators import similarity as S
+
+    monkeypatch.setattr(S, "QVEC_CACHE_MAX_IDS", 4)
+    monkeypatch.setattr(S, "load_table", lambda *a, **kw: _OneRowFrame())
+    errors: list = []
+
+    def worker(seed: int) -> None:
+        try:
+            for i in range(300):
+                S._query_vector(spark, emb_dir, (seed * 7919 + i * 31) % 64)
+        except Exception as e:  # noqa: BLE001 - the assertion reports it
+            errors.append(e)
+
+    _run_threads(worker, 16)
+    assert not errors, errors[:3]
+    assert len(_qvec_map(spark, emb_dir)) <= 4

@@ -7,7 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ct_clickhouse_spark.catalog import load_table
+from ct_clickhouse_spark import artifacts
+from ct_clickhouse_spark.catalog import load_table, table_path
 from ct_clickhouse_spark.operators.dedup import (
     INCREMENTAL_MOD,
     doc_incremental_new,
@@ -117,7 +118,7 @@ def test_small_corpus_skips_bloom_build(spark):
         "doc_id long, n_chars int, text string",
     )
     corpus = docs.selectExpr("md5(text) AS text_hash")
-    dedup._INC_BLOOM_CACHE.clear()
+    artifacts.invalidate(table_path("/nonexistent-key", "documents"))
     bitmap, n = dedup._corpus_bloom_cached(spark, "/nonexistent-key", corpus)
     assert bitmap is None and n == 20
 

@@ -153,19 +153,16 @@ def test_lm_inline_matches_join_path(spark):
     lands on."""
     from ct_clickhouse_spark.catalog import load_table
     from ct_clickhouse_spark.operators.text import (
-        _LM_CACHE,
-        _lm_maps,
+        _bigram_lm,
         bigram_lm_scores,
         lm_score,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    inline = bigram_lm_scores(spark, sf_dir)  # populates _LM_CACHE
-    key = next(k for k in _LM_CACHE if k[1] == sf_dir)
-    lm = _LM_CACHE[key]
-    maps = _lm_maps(spark, sf_dir, lm)
+    inline = bigram_lm_scores(spark, sf_dir)
+    c12, v, maps = _bigram_lm(spark, sf_dir)  # the entry the slot used
     assert maps is not None, "fixture LM should be under the inline gate"
-    joined = lm_score(load_table(spark, sf_dir, "documents"), lm=lm)
+    joined = lm_score(load_table(spark, sf_dir, "documents"), lm=(c12, v))
     a = inline.toPandas().sort_values("doc_id").reset_index(drop=True)
     b = joined.toPandas().sort_values("doc_id").reset_index(drop=True)
     assert a.equals(b)
@@ -180,10 +177,9 @@ def test_lm_paths_match_on_synthetic_edge_docs(spark):
     import pandas as pd
 
     from ct_clickhouse_spark.operators.text import (
-        _LM_CACHE,
+        _bigram_lm,
         _lm_encs,
         _lm_agg_cols,
-        _lm_maps,
         _bigram_strings,
         _words,
         lm_score,
@@ -191,12 +187,8 @@ def test_lm_paths_match_on_synthetic_edge_docs(spark):
     from pyspark.sql import functions as F
 
     sf_dir = "/root/testdata/sf0.001"
-    from ct_clickhouse_spark.operators.text import bigram_lm_scores
-
-    bigram_lm_scores(spark, sf_dir)  # populate the LM artifact
-    key = next(k for k in _LM_CACHE if k[1] == sf_dir)
-    lm = _LM_CACHE[key]
-    maps = _lm_maps(spark, sf_dir, lm)
+    c12, v, maps = _bigram_lm(spark, sf_dir)
+    lm = (c12, v)
     assert maps is not None
 
     # one in-vocab word pair, repeated, gives _cnt > 1 per (w1, w2)

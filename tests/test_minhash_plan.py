@@ -155,65 +155,64 @@ def test_planted_recall_matches_banding_analytic(spark, tmp_path, n_doc, seed):
 # cache miss computes at the corpus plan's k up front.
 
 
-def _fresh_sig_cache():
-    from ct_clickhouse_spark.operators import dedup as D
+def _sig_entry(spark, sf_dir):
+    """The registry's signature entry for ``sf_dir`` (fails if absent)."""
+    from ct_clickhouse_spark import artifacts
+    from ct_clickhouse_spark.catalog import table_path
 
-    saved = dict(D._SIG_CACHE)
-    D._SIG_CACHE.clear()
-    return D, saved
+    return artifacts.get_or_build(
+        spark,
+        "minhash_sigs",
+        sf_dir,
+        lambda: pytest.fail("no signature entry in the registry"),
+        deps=[table_path(sf_dir, "documents")],
+    )
 
 
 def test_smaller_k_served_by_projection(spark, tmp_path, monkeypatch):
-    D, saved = _fresh_sig_cache()
-    try:
-        sf_dir, _ = _make_corpus(tmp_path, 400, seed=23)
-        full = D._minhash_sig_df(spark, sf_dir, k=48)
-        assert len([c for c in full.columns if c.startswith("h")]) == 48
-        # the corpus is now unloadable: a second full-corpus aggregate
-        # would have to re-load documents and must not happen
-        monkeypatch.setattr(
-            D,
-            "load_table",
-            lambda *a, **kw: (_ for _ in ()).throw(
-                AssertionError("second full-corpus signature pass ran")
-            ),
-        )
-        small = D._minhash_sig_df(spark, sf_dir, k=16)
-        assert small.columns == ["doc_id"] + [f"h{i}" for i in range(16)]
-        lhs = {r["doc_id"]: [r[f"h{i}"] for i in range(16)] for r in small.collect()}
-        rhs = {r["doc_id"]: [r[f"h{i}"] for i in range(16)] for r in full.collect()}
-        assert lhs == rhs  # seed-stable prefix property, observed
-    finally:
-        D._SIG_CACHE.clear()
-        D._SIG_CACHE.update(saved)
+    from ct_clickhouse_spark.operators import dedup as D
+
+    sf_dir, _ = _make_corpus(tmp_path, 400, seed=23)
+    full = D._minhash_sig_df(spark, sf_dir, k=48)
+    assert len([c for c in full.columns if c.startswith("h")]) == 48
+    # the corpus is now unloadable: a second full-corpus aggregate
+    # would have to re-load documents and must not happen
+    monkeypatch.setattr(
+        D,
+        "load_table",
+        lambda *a, **kw: (_ for _ in ()).throw(
+            AssertionError("second full-corpus signature pass ran")
+        ),
+    )
+    small = D._minhash_sig_df(spark, sf_dir, k=16)
+    assert small.columns == ["doc_id"] + [f"h{i}" for i in range(16)]
+    lhs = {r["doc_id"]: [r[f"h{i}"] for i in range(16)] for r in small.collect()}
+    rhs = {r["doc_id"]: [r[f"h{i}"] for i in range(16)] for r in full.collect()}
+    assert lhs == rhs  # seed-stable prefix property, observed
 
 
 def test_miss_precomputes_at_plan_k(spark, tmp_path, monkeypatch):
     """Sweep order independence: when the adaptive plan wants k=48, a
     FIRST request for k=16 must compute (and cache) the k=48 frame so
     the later LSH request is also a cache hit — one aggregate total."""
-    D, saved = _fresh_sig_cache()
-    try:
-        sf_dir, _ = _make_corpus(tmp_path, 600, seed=29)
-        monkeypatch.setattr(D, "MINHASH_ADAPT_N", 100)  # plan: k=48 at 600 docs
-        plan_k = D._minhash_plan(600)[0]
-        assert plan_k > 16
-        small = D._minhash_sig_df(spark, sf_dir, k=16)
-        assert small.columns == ["doc_id"] + [f"h{i}" for i in range(16)]
-        cached_ks = {k for (_sid, sdir, k) in D._SIG_CACHE if sdir == sf_dir}
-        assert cached_ks == {plan_k}
-        monkeypatch.setattr(
-            D,
-            "load_table",
-            lambda *a, **kw: (_ for _ in ()).throw(
-                AssertionError("plan-k request re-ran the signature pass")
-            ),
-        )
-        full = D._minhash_sig_df(spark, sf_dir, k=plan_k)
-        assert len([c for c in full.columns if c.startswith("h")]) == plan_k
-    finally:
-        D._SIG_CACHE.clear()
-        D._SIG_CACHE.update(saved)
+    from ct_clickhouse_spark.operators import dedup as D
+
+    sf_dir, _ = _make_corpus(tmp_path, 600, seed=29)
+    monkeypatch.setattr(D, "MINHASH_ADAPT_N", 100)  # plan: k=48 at 600 docs
+    plan_k = D._minhash_plan(600)[0]
+    assert plan_k > 16
+    small = D._minhash_sig_df(spark, sf_dir, k=16)
+    assert small.columns == ["doc_id"] + [f"h{i}" for i in range(16)]
+    assert len(_sig_entry(spark, sf_dir).columns) == 1 + plan_k
+    monkeypatch.setattr(
+        D,
+        "load_table",
+        lambda *a, **kw: (_ for _ in ()).throw(
+            AssertionError("plan-k request re-ran the signature pass")
+        ),
+    )
+    full = D._minhash_sig_df(spark, sf_dir, k=plan_k)
+    assert len([c for c in full.columns if c.startswith("h")]) == plan_k
 
 
 def test_merge_pin_gated_on_corpus_size(spark, tmp_path, monkeypatch):
@@ -222,28 +221,27 @@ def test_merge_pin_gated_on_corpus_size(spark, tmp_path, monkeypatch):
     ABOVE the adaptive knee the band self-join must be sort-merge —
     regardless of Catalyst's size estimate — while BELOW it the pin is
     absent and Catalyst keeps its (faster, broadcastable) choice."""
-    D, saved = _fresh_sig_cache()
-    try:
-        sf_dir, _ = _make_corpus(tmp_path, 400, seed=29)
+    from ct_clickhouse_spark import artifacts
+    from ct_clickhouse_spark.catalog import table_path
+    from ct_clickhouse_spark.operators import dedup as D
 
-        # below the knee: no forced merge anywhere in the slot's plan
-        small_plan = D.doc_minhash_lsh_pairs(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" not in small_plan, (
-            "fixture-scale plan should keep Catalyst's join choice"
-        )
+    sf_dir, _ = _make_corpus(tmp_path, 400, seed=29)
 
-        # above the knee (rowcount mocked; 400 physical rows keep the
-        # plan build cheap): every band/sig join must be sort-merge
-        D._SIG_CACHE.clear()
-        monkeypatch.setattr(D, "table_rowcount", lambda *a, **k: D.MINHASH_ADAPT_N + 1)
-        big_plan = D.doc_minhash_lsh_pairs(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in big_plan, (
-            "above-knee band self-join lost its sort-merge pin"
-        )
-        assert "BroadcastHashJoin" not in big_plan, (
-            "above-knee plan statically broadcast a corpus-sized side "
-            "(the measured sf30 driver-death shape)"
-        )
-    finally:
-        D._SIG_CACHE.clear()
-        D._SIG_CACHE.update(saved)
+    # below the knee: no forced merge anywhere in the slot's plan
+    small_plan = D.doc_minhash_lsh_pairs(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in small_plan, (
+        "fixture-scale plan should keep Catalyst's join choice"
+    )
+
+    # above the knee (rowcount mocked; 400 physical rows keep the
+    # plan build cheap): every band/sig join must be sort-merge
+    artifacts.invalidate(table_path(sf_dir, "documents"))
+    monkeypatch.setattr(D, "table_rowcount", lambda *a, **k: D.MINHASH_ADAPT_N + 1)
+    big_plan = D.doc_minhash_lsh_pairs(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in big_plan, (
+        "above-knee band self-join lost its sort-merge pin"
+    )
+    assert "BroadcastHashJoin" not in big_plan, (
+        "above-knee plan statically broadcast a corpus-sized side "
+        "(the measured sf30 driver-death shape)"
+    )

@@ -4,17 +4,17 @@
   splits), never a small-but-multi-split frame (r15 advice: on a real
   cluster 'narrower than the core count' is common and must not buy a
   payload shuffle);
-- memoizes the split-count probe per (session, table state) when given
-  a table_key, and invalidate_table clears the memo.
+- keeps the split-count probe in the artifact registry per (session,
+  table) when given a table_key, and invalidate_table drops it.
 """
 
 from __future__ import annotations
 
+from ct_clickhouse_spark import artifacts
 from ct_clickhouse_spark.catalog import (
-    _SCAN_WIDTH_MEMO,
-    _session_key,
     invalidate_table,
     load_table,
+    table_path,
     widen_narrow_scan,
 )
 from tests.conftest import SF_DIR
@@ -38,16 +38,24 @@ def test_multi_split_frame_is_untouched(spark):
 
 
 def test_probe_memoized_per_table_and_invalidated(spark):
-    _SCAN_WIDTH_MEMO.pop(SF_DIR, None)
+    path = table_path(SF_DIR, "documents")
+
+    def stored(build=lambda: None):
+        return artifacts.get_or_build(
+            spark, "scan_width", (SF_DIR, "documents"), build, deps=[path]
+        )
+
+    artifacts.invalidate(path)
     docs = load_table(spark, SF_DIR, "documents")
     widen_narrow_scan(docs, spark, table_key=(SF_DIR, "documents"))
-    skey = _session_key(spark)
-    assert _SCAN_WIDTH_MEMO[SF_DIR][(skey, "documents")] == 1
-    # memo hit: poison the stored value and confirm the gate reads it
-    _SCAN_WIDTH_MEMO[SF_DIR][(skey, "documents")] = 99
+    assert stored() == 1
+    # registry hit: poison the stored value and confirm the gate reads it
+    artifacts.invalidate(path)
+    assert stored(lambda: 99) == 99
     assert (
         widen_narrow_scan(docs, spark, table_key=(SF_DIR, "documents"))
         is docs
     )
     invalidate_table(spark, SF_DIR, "documents")
-    assert SF_DIR not in _SCAN_WIDTH_MEMO
+    assert stored() is None  # dropped: the lookup had to rebuild
+    artifacts.invalidate(path)  # leave no probe stub for later tests
