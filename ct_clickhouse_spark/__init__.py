@@ -84,14 +84,6 @@ _FRAME_API = {
         "ct_clickhouse_spark.operators.similarity",
         "sq8_quantize",
     ),
-    "ann_regime_probe": (
-        "ct_clickhouse_spark.operators.similarity",
-        "ann_regime_probe",
-    ),
-    "ann_topk_auto": (
-        "ct_clickhouse_spark.operators.similarity",
-        "ann_topk_auto",
-    ),
     "rp_project": (
         "ct_clickhouse_spark.operators.similarity",
         "rp_project",

@@ -3,7 +3,7 @@
 Policy, stated once: cache INDEX STATE, never a query's answer. An entry
 is state that later queries refine — a resolved table plan or row count,
 signatures, shingles, centroids, an LM table, decoded media, quantile
-bounds, an on-disk index — so a warm call still runs the query's own
+bounds, an on-disk snapshot — so a warm call still runs the query's own
 work. The reference keeps no query-side cache either: ClickHouse keeps
 only derived index state (the sparse primary index) beside the data it
 was built from.
@@ -129,7 +129,7 @@ def get_or_build(spark, kind: str, key, build, deps=(), release=None):
     """The entry (session, ``kind``, ``key``), built by ``build()`` on a
     miss or when a path in ``deps`` changed since it was built.
     ``release(value)`` frees its data once stale (rmtree of an on-disk
-    index, eager free of checkpoint blocks); persisted frames in the
+    snapshot, eager free of checkpoint blocks); persisted frames in the
     value are unpersisted without it."""
     full = (session_key(spark), kind, key)
     deps = tuple(deps)

@@ -165,7 +165,7 @@ def bloom_prune(
 def bloom_prune_prebuilt(fact: DataFrame, key: str, bitmap: list[int]) -> DataFrame:
     """``bloom_prune`` against an already-built word array — the probe
     half on its own, for callers that cache the sketch (build once, probe
-    per query: the same artifact lifecycle as the persisted IVF index)."""
+    per query: the same artifact lifecycle as the SQ8 index)."""
     if not bitmap:
         # m_bits=0 makes pmod(hash, 0) NULL and the membership predicate
         # NULL — every fact row silently dropped (the same hazard

@@ -609,7 +609,7 @@ def incremental_dedup(
     branch is the composition that stays row-identical.
 
     At 100 TB the sketch is a maintained artifact of the corpus (rebuilt
-    per merge window, same lifecycle as the persisted IVF index), not
+    per merge window, same lifecycle as the SQ8 index), not
     rebuilt per call — pass it as ``prebuilt_bloom``; otherwise it is
     built here, sized by ``expected_items`` (defaulting to a count over
     the corpus key column — one cheap single-column scan).
@@ -641,7 +641,7 @@ def incremental_dedup(
 
 # The corpus Bloom sketch is a maintained artifact (rebuilt per merge
 # window, not per query — the lifecycle argued in incremental_dedup's
-# docstring); cache it per (session, sf) like the IVF index path. The
+# docstring); cache it per (session, sf) like the IVF centroids. The
 # entry keeps (bitmap, corpus_count) so the slot can also size-route.
 
 # Below this corpus size the Bloom routing is pure overhead (two filter
@@ -1211,7 +1211,7 @@ def lsh_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NOTE: on a cold registry, building the semdedup side TRAINS the
     k-means centroids (IVF_ITERS distributed passes at construction
-    time) — the same once-per-(session, sf) artifact build the IVF index
+    time) — the same once-per-(session, sf) artifact build ivf_topk
     pays."""
     from .multimodal import perceptual_near_dups
     from .similarity import (

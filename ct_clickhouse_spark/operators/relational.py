@@ -846,8 +846,8 @@ def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BLOOM_DIM_MOD = 50  # ~2% of customers: selective but not broadcast-trivial
 
-# The Bloom sketch is a build-once artifact (same class as the persisted
-# IVF index): building it costs a dim scan + a bounded collect, probing it
+# The Bloom sketch is a build-once artifact (same class as the SQ8
+# index): building it costs a dim scan + a bounded collect, probing it
 # is a codegen filter. Kept per (session, sf) so repeated slot runs pay
 # the probe, not the build.
 

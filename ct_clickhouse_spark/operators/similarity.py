@@ -8,8 +8,9 @@ Four tiers, mirroring how ANN serving actually scales:
    signatures via posexplode + broadcast hyperplane join, banded (4x4 bits)
    bucket-local candidate generation, exact cosine verification only on
    candidates. Recall/precision tuned by bits-per-band vs band count.
-4. IVF (coarse quantizer + probed buckets) — the partition-pruning ANN
-   path: assignment is a partition key, a probe reads 2/8 of the data.
+4. IVF (coarse quantizer + probed buckets) — exact cosine only inside
+   the query's nearest cells; SQ8 (int8 codes + exact re-rank) is the
+   single-query top-k path that holds recall on any corpus.
 
 The hyperplanes are pseudo-random ±1 vectors derived from xxhash64(bit,pos)
 parity: deterministic across runs/engines with no RNG state to ship.
@@ -433,7 +434,7 @@ def semdedup_pairs(
     ~0.95+) sit far inside one cell. Recall floor test-pinned against
     the exact GEMM.
 
-    Plan: centroids from the same distributed Lloyd trainer the IVF index
+    Plan: centroids from the same distributed Lloyd trainer ivf_topk
     uses (only k x d doubles ever reach the driver), broadcast; cell
     assignment is a map-side numpy top-P argsort emitting P rows per
     vector; ONE shuffle groups each cell; a dense numpy kernel scores
@@ -573,8 +574,8 @@ def semantic_dedup_groups(
 
 
 # Trained centroids are k x d driver-held floats — tiny, but the TRAINING
-# is IVF_ITERS distributed passes; three consumers (IVF build, SemDeDup
-# assignment, per-call ivf_topk) would each retrain identically.
+# is IVF_ITERS distributed passes; three consumers (ivf_topk,
+# ivf_topk_batch, SemDeDup assignment) would each retrain identically.
 
 # SemDeDup's linearity argument requires the MEAN CELL SIZE to stay
 # constant as the corpus grows (k ≈ n / target_size — Abbas et al. §2);
@@ -604,7 +605,9 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str):
     leak into assignments — keeping the index deterministic at any
     parallelism. Nothing larger than k x d doubles is ever centralized,
     at any corpus size. Trained once per (session, sf): deterministic, so
-    every consumer would retrain the identical array."""
+    every consumer would retrain the identical array. A zero-norm corpus
+    row has no direction to assign, so training raises ValueError naming
+    its vec_id instead of letting a NaN centroid poison every cell."""
     return artifacts.get_or_build(
         spark,
         "ivf_centroids",
@@ -619,6 +622,14 @@ def _train_centroids(spark: SparkSession, sf_dir: str):
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    zero = (
+        emb.filter(_norm(F.col("embedding")) == 0)
+        .agg(F.min("vec_id").alias("v"))
+        .collect()[0]
+        .v
+    )
+    if zero is not None:
+        raise ValueError(f"embedding vec_id {zero} has zero norm")
     n_clusters = _adaptive_clusters(table_rowcount(spark, sf_dir, "embeddings"))
     seed_rows = emb.orderBy("vec_id").limit(n_clusters).collect()
     cents = np.array([r.embedding for r in seed_rows], dtype=np.float64)
@@ -683,21 +694,27 @@ def ivf_topk(
     n_probes: int | None = None,
     k: int = TOPK,
 ) -> DataFrame:
-    """IVF approximate top-k (the other classic ANN scale path, besides
-    LSH): vectors are bucketed by nearest coarse centroid; the query
-    probes only its ``n_probes`` (default IVF_PROBES) closest buckets
-    and runs exact cosine there. At scale the assignment is a partition
-    key — the probe reads n_probes/IVF_CLUSTERS of the data instead of
-    all of it. Training is distributed (see _ivf_centroids); only the k
-    centroids and the single query vector are broadcast."""
+    """IVF approximate top-k: vectors are bucketed by nearest coarse
+    centroid; the query probes only its ``n_probes`` (default
+    IVF_PROBES) closest buckets and runs exact cosine there. Each call
+    scans the corpus once, assigning every row to its cell map-side.
+    Training is distributed (see _ivf_centroids); only the k centroids
+    and the single query vector are broadcast.
+
+    A zero-norm query vector or corpus row raises ValueError naming its
+    vec_id: its cosine is undefined, and a NaN would silently NULL the
+    scores or empty the probed cells."""
     import numpy as np
     import pandas as pd
 
     if n_probes is not None and n_probes < 1:
         raise ValueError(f"n_probes must be >= 1, got {n_probes}")
-    cents = _ivf_centroids(spark, sf_dir)
     qvec = np.array(_query_vector(spark, sf_dir, query_vec_id), dtype=np.float64)
-    qvec /= np.linalg.norm(qvec)
+    qn = np.linalg.norm(qvec)
+    if not qn:
+        raise ValueError(f"query vector {query_vec_id} has zero norm")
+    qvec /= qn
+    cents = _ivf_centroids(spark, sf_dir)
     probe = set(
         np.argsort(-(cents @ qvec))[
             : (IVF_PROBES if n_probes is None else n_probes)
@@ -753,9 +770,8 @@ def ivf_topk_batch(
 
     Plan: queries assign map-side to their ``probes`` nearest coarse
     cells (the multi-probe recall lever); corpus vectors assign to their
-    one home cell (the same rule the persisted index materializes as a
-    partition key). ONE shuffle co-locates each cell's corpus slice with
-    the queries probing it; a dense numpy kernel scores cell-locally and
+    one home cell (the same rule ivf_topk applies). ONE shuffle
+    co-locates each cell's corpus slice with the queries probing it; a dense numpy kernel scores cell-locally and
     emits each query's local top-k; a final window keeps the global
     top-k per query. Nothing all-pairs: cost is
     O(n_queries * probes * cell_size * d) kernel work + one shuffle of
@@ -901,157 +917,14 @@ def embedding_incremental_pairs(
     )
 
 
-def ivf_build(spark: SparkSession, sf_dir: str, index_path: str) -> None:
-    """Materialize the IVF index: train the coarse quantizer once, then
-    write (a) the k centroids and (b) every vector under its assigned
-    cluster as a Hive PARTITION column. This is the piece ivf_topk's
-    per-call shape lacks at scale: with assignments on disk, a probe is
-    PARTITION PRUNING — the scan physically reads IVF_PROBES/IVF_CLUSTERS
-    of the corpus and nothing else, and training cost is paid once, not
-    per query."""
-    import numpy as np
-    import pandas as pd
-
-    cents = _ivf_centroids(spark, sf_dir)
-    (
-        spark.createDataFrame(
-            [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
-            "cluster int, centroid array<double>",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(index_path + "/centroids")
-    )
-    bc = spark.sparkContext.broadcast(cents)
-
-    def _assign(batches):
-        c = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            out = pdf[["vec_id", "label", "embedding"]].copy()
-            out["cluster"] = np.argmax(m @ c.T, axis=1).astype("int32")
-            yield out
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding"
-    )
-    (
-        emb.mapInPandas(
-            _assign, "vec_id long, label int, embedding array<float>, cluster int"
-        )
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(index_path + "/vectors")
-    )
-
-
-def ivf_probe(
-    spark: SparkSession,
-    index_path: str,
-    query_vec,
-    k: int = TOPK,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """Top-k over the persisted IVF index: rank centroids on the driver
-    (k rows), then scan ONLY the probed cluster partitions (the filter on
-    the partition column prunes at planning time — verify PartitionFilters
-    in .explain) and run exact cosine there. ``exclude_vec_id`` drops one
-    id before the top-k (the query vector itself, for self-search)."""
-    import numpy as np
-    import pandas as pd
-
-    # the centroid table is part of the persisted index, so the per-call
-    # collect job it cost (~0.6 s/probe: one scheduling-floor Spark job
-    # to fetch n_cells rows) is a registry entry built from that table;
-    # driver-side centroid RANKING below stays per-call (it depends on
-    # the query).
-    cents_path = index_path + "/centroids"
-    cents = artifacts.get_or_build(
-        spark,
-        "ivf_probe_centroids",
-        index_path,
-        lambda: np.array(
-            [
-                r.centroid
-                for r in spark.read.parquet(cents_path).orderBy("cluster").collect()
-            ],
-            dtype=np.float64,
-        ),
-        deps=[cents_path],
-    )
-    q = np.array(query_vec, dtype=np.float64)
-    q /= np.linalg.norm(q)
-    probe = [int(c) for c in np.argsort(-(cents @ q))[:IVF_PROBES]]
-    bq = spark.sparkContext.broadcast(q)
-
-    def _score(batches):
-        qv = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "cosine": np.round(m @ qv, 4),
-                }
-            )
-
-    vectors = spark.read.parquet(index_path + "/vectors").filter(
-        F.col("cluster").isin(probe)
-    )
-    if exclude_vec_id is not None:
-        vectors = vectors.filter(F.col("vec_id") != exclude_vec_id)
-    return (
-        vectors.select("vec_id", "label", "embedding")
-        .mapInPandas(_score, "vec_id long, label int, cosine double")
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(k)
-    )
-
-
-# The registry entry for the indexed-search slot is the on-disk
-# index path, not data; repeated probes (the bench runs each query
-# several times) pay the partition-pruned scan only, exactly the
-# at-scale serving shape.
-def ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The driver-slot IVF query: build the persisted index ONCE per
-    (session, sf-dir) via ivf_build, then answer through ivf_probe — so
-    the driver row exercises the partition-pruned path (PartitionFilters
-    on the cluster column, test-asserted in tests/test_ivf_index.py)
-    instead of retraining centroids per call. Same output contract as
-    ivf_topk: top-k against the vec_id=0 query vector, query excluded."""
-    import shutil
-
-    def build() -> str:
-        path = artifacts.scratch_dir("ivf_index_")
-        ivf_build(spark, sf_dir, path)
-        return path
-
-    path = artifacts.get_or_build(
-        spark,
-        "ivf_index",
-        sf_dir,
-        build,
-        deps=[table_path(sf_dir, "embeddings")],
-        release=lambda p: shutil.rmtree(p, ignore_errors=True),
-    )
-    qvec = _query_vector(spark, sf_dir, QUERY_VEC_ID)
-    return ivf_probe(spark, path, qvec, exclude_vec_id=QUERY_VEC_ID)
-
-
 # --- SQ8 scalar quantization (FAISS-SQ8 analog) -------------------------
-# The third classic ANN memory/scale lever next to LSH and IVF: store each
-# normalized vector as d int8 codes (8x smaller than float64, 4x smaller
-# than float32), score approximately IN THE CODE DOMAIN with pure JVM
-# expressions, and re-rank only a small candidate set exactly. At 100 TB
-# the scan/shuffle byte volume — not FLOPs — is the bottleneck this buys
-# back; quantization error is bounded by scale_d/2/127 per dimension.
+# The third classic ANN lever next to LSH and IVF: store each normalized
+# vector as d int8 codes (8x smaller than float64, 4x smaller than
+# float32), score approximately IN THE CODE DOMAIN with pure JVM
+# expressions, and re-rank only a small candidate set exactly — the
+# filter-and-verify shape. Quantization error is bounded by
+# scale_d/2/127 per dimension. The index keeps each original vector
+# beside its codes, so the re-rank needs no second scan (see _sq8_index).
 SQ8_LEVELS = 127
 SQ8_REFINE = 4  # candidates fetched per final result before exact re-rank
 
@@ -1098,25 +971,12 @@ def sq8_quantize(
     return codes, scales
 
 
-def _sq8_cached(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]]:
-    def build():
-        codes, scales = sq8_quantize(load_table(spark, sf_dir, "embeddings"))
-        return codes.persist(), scales
-
-    return artifacts.get_or_build(
-        spark, "sq8_codes", sf_dir, build, deps=[table_path(sf_dir, "embeddings")]
-    )
-
-
-def _sq8_serving_index(spark: SparkSession, sf_dir: str):
-    """The SERVING layout of the SQ8 index: codes co-located with the
-    result payload (label) AND the original vector — the classic ANN
-    serving trade (FAISS-style indexes keep re-rank vectors beside the
-    codes). Scanning it reads ~9x the bytes of the codes-only frame, but
-    the whole point lookup becomes ONE distributed job: approximate
-    TakeOrdered returns candidates WITH their vectors, and the exact
-    re-rank of k*refine rows runs driver-side. The codes-only
-    sq8_topk remains the scan-compression shape for batch/analytics."""
+def _sq8_index(spark: SparkSession, sf_dir: str):
+    """The SQ8 index: codes co-located with the result payload (label)
+    AND the original vector, the FAISS-style layout that keeps re-rank
+    vectors beside the codes. A top-k is then ONE distributed job: the
+    approximate TakeOrdered returns candidates WITH their vectors, and
+    the exact re-rank of k*refine rows runs driver-side."""
 
     def build():
         emb = load_table(spark, sf_dir, "embeddings").withColumn(
@@ -1126,7 +986,7 @@ def _sq8_serving_index(spark: SparkSession, sf_dir: str):
         return codes.persist(), scales
 
     return artifacts.get_or_build(
-        spark, "sq8_serving", sf_dir, build, deps=[table_path(sf_dir, "embeddings")]
+        spark, "sq8_index", sf_dir, build, deps=[table_path(sf_dir, "embeddings")]
     )
 
 
@@ -1147,27 +1007,31 @@ def _round_half_up4(x: float) -> float:
     )
 
 
-def _sq8_serving_scored(
+def sq8_topk_rows(
     spark: SparkSession,
     sf_dir: str,
     k: int = TOPK,
     refine: int = SQ8_REFINE,
     query_vec_id: int = QUERY_VEC_ID,
 ) -> list[tuple]:
-    """The single-job SQ8 point lookup (see sq8_topk_serving), returning
-    plain (vec_id, label, cosine) tuples: one TakeOrdered job over the
-    payload-carrying index (approx score from the codes, exactly as
-    sq8_topk computes it), then the exact re-rank of the k*refine
-    candidates DRIVER-side with bit-identical arithmetic — python's
-    left-to-right sum reproduces aggregate()'s fold order over the same
-    doubles, sqrt is IEEE-exact on both sides, and _round_half_up4 is
-    Spark's round."""
-    codes, scales = _sq8_serving_index(spark, sf_dir)
+    """SQ8 approximate top-k as plain (vec_id, label, cosine) tuples.
+
+    Plan: (1) approximate cosine = sum(code_d * w_d) over the int8 codes,
+    where w_d folds the query's code and both scale factors — ONE
+    zip_with/aggregate pair in whole-stage codegen, no Python; (2) one
+    TakeOrdered job returns the k*refine best candidates with their
+    original vectors; (3) the exact cosine re-rank of those candidates
+    runs DRIVER-side with Spark's arithmetic — python's left-to-right sum
+    reproduces aggregate()'s fold order over the same doubles, sqrt is
+    IEEE-exact on both sides, and _round_half_up4 is Spark's round.
+    Recall is pytest-gated against the exact brute-force tier."""
+    codes, scales = _sq8_index(spark, sf_dir)
     qrow = _query_vector(spark, sf_dir, query_vec_id)
     qn = sum(x * x for x in qrow) ** 0.5
     if qn <= 0.0:  # zero vector: every cosine is undefined, not 'low'
         raise ValueError(f"query vector {query_vec_id} has zero norm")
     qnorm = [x / qn for x in qrow]
+    # w_d = q_code_d * scale_d^2 / 127^2, so sum(code_d * w_d) ~= cosine
     weights = [
         round(q / s * SQ8_LEVELS) * s * s / (SQ8_LEVELS * SQ8_LEVELS)
         for q, s in zip(qnorm, scales)
@@ -1196,51 +1060,6 @@ def _sq8_serving_scored(
     return scored[:k]
 
 
-def sq8_topk_serving(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOPK,
-    refine: int = SQ8_REFINE,
-    query_vec_id: int = QUERY_VEC_ID,
-) -> DataFrame:
-    """sq8_topk's serving twin as a DataFrame — rows identical to
-    sq8_topk by construction (tests/test_sq8_serving.py pins it per
-    query id). The HTTP endpoint skips this wrapper and takes the raw
-    tuples (ann_topk_auto_rows): createDataFrame on 10 rows costs a
-    full extra job (~500 ms measured), which would give back everything
-    the single-job shape saves."""
-    return spark.createDataFrame(
-        _sq8_serving_scored(spark, sf_dir, k, refine, query_vec_id),
-        "vec_id long, label int, cosine double",
-    )
-
-
-def ann_topk_auto_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOPK,
-    query_vec_id: int = QUERY_VEC_ID,
-    target_recall: float = 0.9,
-) -> list[list]:
-    """ann_topk_auto for the serving layer, returning JSON-ready rows
-    ([vec_id, label, cosine]) without a result DataFrame round trip.
-    SQ8 route: the single-job driver re-rank; IVF route: the probed
-    index query, collected."""
-    probe = ann_regime_probe(spark, sf_dir, k=k, target_recall=target_recall)
-    if probe["route"] == "ivf":
-        df = ivf_topk(
-            spark,
-            sf_dir,
-            query_vec_id=query_vec_id,
-            n_probes=probe["probes_for_target"],
-            k=k,
-        )
-        return [list(t) for t in (tuple(r) for r in df.collect())]
-    return [
-        list(t) for t in _sq8_serving_scored(spark, sf_dir, k, SQ8_REFINE, query_vec_id)
-    ]
-
-
 def sq8_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -1248,68 +1067,18 @@ def sq8_topk(
     refine: int = SQ8_REFINE,
     query_vec_id: int = QUERY_VEC_ID,
 ) -> DataFrame:
-    """SQ8 approximate top-k against the vec_id=0 query vector.
+    """SQ8 approximate top-k against the query vector (default
+    vec_id=0): sq8_topk_rows as a (vec_id, label, cosine) DataFrame.
+    The rows go through pandas so Arrow builds the frame: a plain list
+    made sq8_topk(...).collect() take 468 ms against 201 ms (median of
+    20 alternating calls, sf0.01, 4 cores)."""
+    import pandas as pd
 
-    Plan: (1) approximate cosine = sum(code_d * w_d) over the int8 codes,
-    where w_d folds the query's code and both scale factors — ONE
-    zip_with/aggregate pair in whole-stage codegen, no Python; (2)
-    TakeOrdered k*refine candidates by approximate score; (3) exact
-    cosine re-rank of only those candidates (broadcast of k*refine ids).
-    Recall is pytest-gated against the exact brute-force tier."""
-    codes, scales = _sq8_cached(spark, sf_dir)
-    qrow = _query_vector(spark, sf_dir, query_vec_id)
-    qn = sum(x * x for x in qrow) ** 0.5
-    if qn <= 0.0:  # zero vector: every cosine is undefined, not 'low'
-        raise ValueError(f"query vector {query_vec_id} has zero norm")
-    qnorm = [x / qn for x in qrow]
-    # w_d = q_code_d * scale_d^2 / 127^2, so sum(code_d * w_d) ~= cosine
-    weights = [
-        round(q / s * SQ8_LEVELS) * s * s / (SQ8_LEVELS * SQ8_LEVELS)
-        for q, s in zip(qnorm, scales)
-    ]
-    approx = F.expr(
-        f"aggregate(zip_with(codes, {_dbl_array_sql(weights)}, "
-        "(c, w) -> c * w), 0.0D, (s, v) -> s + v)"
-    )
-    # candidate ids come to the driver as a BOUNDED list (k * refine
-    # rows — a TakeOrderedAndProject job over the code scan) and return
-    # to the plan as an isin literal: a broadcast join here added a
-    # third sequential job (broadcast build) to the serving hot path,
-    # and each job pays the ~95 ms scheduling floor PROFILE_serving_r11
-    # measured. Same candidate set, same final rows.
-    cand_ids = [
-        r.vec_id
-        for r in codes.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", approx.alias("approx_cos"))
-        .orderBy(F.col("approx_cos").desc(), "vec_id")
-        .limit(k * refine)
-        .select("vec_id")
-        .collect()
-    ]
-    emb = _emb_double(load_table(spark, sf_dir, "embeddings"))
-    # the query vector is already resolved driver-side (cached, qrow):
-    # carried as a literal-array SQL string instead of a broadcast 1-row
-    # subplan — same doubles, same zip_with/aggregate arithmetic (array
-    # order matches python's left-to-right sum, sqrt is IEEE-exact on
-    # both sides), one fewer parquet-scan subtree and ~200 ms less py4j
-    # plan construction in the per-request serving job. norm(q) is the
-    # driver-computed qn, identical to the in-plan aggregate by
-    # construction.
-    cos = F.expr(
-        f"round(aggregate(zip_with(emb, {_dbl_array_sql(qrow)}, "
-        "(x, y) -> x * y), 0.0D, (s, v) -> s + v) / "
-        "(sqrt(aggregate(emb, 0.0D, (s, v) -> s + v * v)) * "
-        f"CAST('{float(qn)!r}' AS DOUBLE)), 4)"
-    )
-    in_cand = F.expr(
-        "vec_id IN (" + ",".join(str(int(i)) for i in cand_ids) + ")"
-    ) if cand_ids else F.lit(False)
-    return (
-        emb.filter(in_cand)
-        .select("vec_id", "label", cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(k)
-    )
+    pdf = pd.DataFrame(
+        sq8_topk_rows(spark, sf_dir, k, refine, query_vec_id),
+        columns=["vec_id", "label", "cosine"],
+    ).astype({"vec_id": "int64", "label": "int32", "cosine": "float64"})
+    return spark.createDataFrame(pdf, "vec_id long, label int, cosine double")
 
 
 RP_DIM = 16  # Johnson-Lindenstrauss target dimension (64 -> 16)
@@ -1417,10 +1186,9 @@ def rp_topk(
         .select("vec_id")
     )
     emb = _emb_double(load_table(spark, sf_dir, "embeddings"))
-    # exact re-rank against the literal query array — the same
-    # literal-carrier shape (and bit-identical arithmetic: left-to-right
-    # fold, IEEE sqrt) as sq8_topk's re-rank, one fewer per-call
-    # parquet-scan + broadcast subtree
+    # exact re-rank against the literal query array (left-to-right fold,
+    # IEEE sqrt — the arithmetic sq8_topk_rows reproduces driver-side), one
+    # fewer per-call parquet-scan + broadcast subtree
     qn = sum(v * v for v in qrow) ** 0.5
     if qn <= 0.0:
         raise ValueError(f"query vector {query_vec_id} has zero norm")
@@ -1445,14 +1213,14 @@ BATCH_QUERY_IDS = [0, 7, 21]
 
 def ann_topk_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The approximate-index family under one rows-only slot, one row
-    shape (kind, vec_id, label, cosine): the persisted-IVF probe
-    (partition-pruned scan), the SQ8 scalar-quantized search (int8
-    code-domain scoring + exact re-rank), the Johnson-Lindenstrauss
+    shape (kind, vec_id, label, cosine): the IVF probed-cell search,
+    the SQ8 scalar-quantized search (int8 code-domain scoring + exact
+    re-rank), the Johnson-Lindenstrauss
     random-projection search (16-dim scoring + exact re-rank), and the
     BATCHED multi-query search ('batch:<query_id>' rows — one
     distributed pass answers all three queries, the ANN serving shape).
     All are pytest-gated on recall/identity against the exact tier."""
-    ivf = ivf_topk_indexed(spark, sf_dir).select(
+    ivf = ivf_topk(spark, sf_dir).select(
         F.lit("ivf").alias("kind"), "vec_id", "label", "cosine"
     )
     sq8 = sq8_topk(spark, sf_dir).select(
@@ -1473,152 +1241,6 @@ def ann_topk_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cosine",
     )
     return ivf.unionByName(sq8).unionByName(rp).unionByName(batch)
-
-
-# ---------------------------------------------------------------------------
-# Regime-aware ANN routing (the round-9 recall study, encoded as the default)
-#
-# The sf1 recall study (ANN_RECALL_sf1.json / ANN_RECALL_planted.json,
-# SCALING.md ANN section) measured two regimes at the same 20k x 64 scale:
-# on a NOISE-DOMINATED corpus SQ8 held recall@10 = 1.00 at 4x compression
-# while IVF needed 12 of 20 probes to reach 0.91 (cell pruning discards
-# true neighbors when neighbors don't align with cells); on a WELL-
-# SEPARATED corpus IVF hit 0.93 at 2 probes (pruning pays exactly there).
-# ann_topk_auto turns that lesson into the default: a cheap sampled
-# cell-concentration probe decides the regime, SQ8 unless the corpus is
-# demonstrably clustered, in which case IVF with a probe count sized to a
-# target recall ON THE SAMPLE. Existing driver slots (ivf_topk, sq8_topk,
-# ann_topk_variants) are untouched — this is the frame-level default for
-# callers who don't know their corpus.
-
-ANN_PROBE_SAMPLE = 512  # vectors collected for the probe (sample_n x d
-#   doubles — ~256 KB at d=64, bounded regardless of corpus size)
-ANN_PROBE_QUERIES = 64  # sample rows treated as queries
-ANN_CLUSTERED_MIN_RECALL = 0.6  # 1-probe sample recall above which the
-#   corpus counts as clustered (measured: 0.93 planted vs 0.20 sf1 noise)
-
-
-def ann_regime_probe(
-    spark: SparkSession,
-    sf_dir: str,
-    sample_n: int = ANN_PROBE_SAMPLE,
-    k: int = TOPK,
-    target_recall: float = 0.9,
-) -> dict:
-    """Sampled cell-concentration probe: is this corpus's neighbor
-    structure aligned with its IVF cells?
-
-    Takes a deterministic hash-ordered sample of ``sample_n`` vectors
-    (TakeOrdered — only the sample ever reaches the driver), assigns
-    each to its nearest trained centroid, and for ANN_PROBE_QUERIES of
-    them computes the exact top-k within the sample. Reports:
-
-    - ``cell_recall_1probe``: mean fraction of a query's true neighbors
-      living in the query's own top-1 cell — the statistic that
-      separated the two measured regimes by >4x;
-    - ``probes_for_target``: the 90th-percentile minimal probe count at
-      which cell-ranked coverage of true neighbors reaches
-      ``target_recall`` on the sample (the recall-targeted IVF knob);
-    - ``route``: "ivf" iff cell_recall_1probe >= ANN_CLUSTERED_MIN_RECALL
-      else "sq8".
-
-    Cost: one distributed centroid training (cached per session/sf) +
-    one TakeOrdered sample scan + numpy on sample_n x d — independent of
-    corpus size."""
-    # the probe parameters are part of the key: a second call with a
-    # different k/target_recall/sample_n must not reuse the first
-    # call's verdict
-    return artifacts.get_or_build(
-        spark,
-        "ann_route",
-        (sf_dir, sample_n, k, target_recall),
-        lambda: _regime_probe(spark, sf_dir, sample_n, k, target_recall),
-        deps=[table_path(sf_dir, "embeddings")],
-    )
-
-
-def _regime_probe(
-    spark: SparkSession, sf_dir: str, sample_n: int, k: int, target_recall: float
-) -> dict:
-    import numpy as np
-
-    cents = _ivf_centroids(spark, sf_dir)
-    rows = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(sample_n)
-        .collect()
-    )
-    m = np.array([r.embedding for r in rows], dtype=np.float64)
-    if len(m) < 2:
-        raise ValueError(
-            f"ann_regime_probe needs >= 2 sample vectors, got {len(m)}"
-        )
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
-    cell_sims = m @ cents.T  # (n, n_cells)
-    assign = np.argmax(cell_sims, axis=1)
-    sims = m @ m.T
-    np.fill_diagonal(sims, -np.inf)
-    n_q = min(ANN_PROBE_QUERIES, len(m))
-    # at most len(m)-1 true neighbors exist: the -inf diagonal must never
-    # let the query count itself among them on tiny corpora
-    k_eff = min(k, len(m) - 1)
-    recalls, probes_needed = [], []
-    for qi in range(n_q):
-        nbrs = np.argsort(-sims[qi])[:k_eff]
-        recalls.append(float(np.mean(assign[nbrs] == assign[qi])))
-        cell_rank = {
-            c: r for r, c in enumerate(np.argsort(-cell_sims[qi]))
-        }
-        nbr_ranks = sorted(cell_rank[c] for c in assign[nbrs])
-        # minimal p with >= target_recall of neighbors in the top-p cells
-        need = int(np.ceil(target_recall * len(nbr_ranks)))
-        probes_needed.append(nbr_ranks[need - 1] + 1)
-    one_probe = float(np.mean(recalls))
-    return {
-        "route": "ivf" if one_probe >= ANN_CLUSTERED_MIN_RECALL else "sq8",
-        "cell_recall_1probe": round(one_probe, 4),
-        "probes_for_target": int(
-            np.percentile(probes_needed, 90, method="higher")
-        ),
-        "n_cells": int(cents.shape[0]),
-        "sample_n": len(m),
-        "target_recall": target_recall,
-    }
-
-
-def ann_topk_auto(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOPK,
-    query_vec_id: int = QUERY_VEC_ID,
-    target_recall: float = 0.9,
-    serving: bool = False,
-) -> DataFrame:
-    """Regime-routed ANN top-k — the recommended default when the
-    corpus's neighbor structure is unknown: SQ8 (measured regime-
-    independent at 4x compression) unless ann_regime_probe finds the
-    corpus clustered, then IVF with the probe count the sample says
-    reaches ``target_recall`` (cell pruning reads probes/n_cells of the
-    data — strictly cheaper than SQ8's full code scan when it applies).
-    Output shape is the tiers' common (vec_id, label, cosine)."""
-    probe = ann_regime_probe(spark, sf_dir, k=k, target_recall=target_recall)
-    if probe["route"] == "ivf":
-        return ivf_topk(
-            spark,
-            sf_dir,
-            query_vec_id=query_vec_id,
-            n_probes=probe["probes_for_target"],
-            k=k,
-        )
-    if serving:
-        # row-identical single-job twin (see sq8_topk_serving) — the
-        # point-lookup latency shape for the /similar endpoint
-        return sq8_topk_serving(spark, sf_dir, k=k, query_vec_id=query_vec_id)
-    return sq8_topk(spark, sf_dir, k=k, query_vec_id=query_vec_id).select(
-        "vec_id", "label", "cosine"
-    )
 
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1853,7 +1475,7 @@ QUERIES = {
     "sim_cosine_pairs": cosine_pairs,
     "sim_topk_centroids": topk_and_centroids,
     "dedup_embedding_groups": groups_global_and_semdedup,
-    "sim_ivf_topk": ann_topk_variants,  # rows-only (approximate indexes: ivf + sq8)
+    "sim_ivf_topk": ann_topk_variants,  # rows-only (approximate indexes: ivf, sq8, rp, batch)
 }
 
 _COS_SQL = (
@@ -1963,7 +1585,7 @@ SECTIONS = {
         ),
     },
     "sim_ivf_topk": {
-        "ivf": ivf_topk_indexed,
+        "ivf": ivf_topk,
         "sq8": sq8_topk,
         "rp": rp_topk,
         "batch": lambda s, d: ivf_topk_batch(

@@ -10,7 +10,7 @@ Endpoint map (reference line refs):
   /stats?date=            daily corpus stats       (app.py:169-209)
   /size                   storage bytes            (app.py:222-239)
   /stream                 SSE change tail          (app.py:245-274)
-  /similar/<vec_id>?k=    regime-routed ANN top-k  (ours; no reference
+  /similar/<vec_id>?k=    SQ8 ANN top-k            (ours; no reference
                           analog — ClickHouse schema has no vectors)
 
 Access control parity: optional ips.txt allowlist (app.py:27-53) and
@@ -79,10 +79,10 @@ def create_app(
     """Build the Flask app over a cert_domains Parquet table.
 
     ``embeddings_sf_dir`` (optional) enables ``/similar/<vec_id>``:
-    regime-routed ANN top-k over that directory's embeddings table via
-    ann_topk_auto — the serving face of the ANN tier. Beyond the
-    reference's 8 endpoints (its ClickHouse schema has no vector
-    column); omitted -> the route 404s."""
+    the SQ8 ANN top-k (similarity.sq8_topk's rows) over that
+    directory's embeddings table. Beyond the reference's 8 endpoints
+    (its ClickHouse schema has no vector column); omitted -> the route
+    404s."""
     if not HAVE_FLASK:
         raise NotImplementedError("flask not installed; serving layer unavailable")
 
@@ -314,21 +314,20 @@ def create_app(
         except ValueError:
             k = 10
         k = max(1, min(k, 100))  # clamp, same policy as /tld's limit
-        from ..operators.similarity import ann_topk_auto_rows
+        from ..operators.similarity import sq8_topk_rows
 
         try:
-            # the regime probe inside is cached per (session, sf,
-            # params): only the first request pays it; every later one
-            # runs just the routed tier's query under this request's
-            # FAIR pool. Rows come back directly (no result-DataFrame
-            # round trip — sq8's serving shape is one job + a driver
-            # re-rank, row-identical to the batch tier by test)
-            rows = ann_topk_auto_rows(
+            # the SQ8 index is built once per (session, embeddings
+            # state); each request then runs one TakeOrdered job under
+            # its FAIR pool plus the driver-side exact re-rank. The
+            # tuples are serialized directly: sq8_topk's DataFrame
+            # wrapper would only be collected again.
+            rows = sq8_topk_rows(
                 spark, embeddings_sf_dir, k=k, query_vec_id=vec_id
             )
         except IndexError:
-            # the tiers resolve the query vector eagerly; an unknown
-            # vec_id surfaces as an empty driver-side collect
+            # the query vector resolves eagerly; an unknown vec_id
+            # surfaces as an empty driver-side collect
             return jsonify({"error": f"vec_id {vec_id} not found"}), 404
         return jsonify(rows)
 

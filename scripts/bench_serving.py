@@ -46,9 +46,9 @@ PATHS = [
     "/tld/rs?limit=5",
     "/stats?date=1995-06-15",
     "/size",
-    # round-11: the ANN tier's serving face (regime-routed top-k; the
-    # probe is cached after the warmup hit, so timed requests measure
-    # the routed tier's query like any other endpoint)
+    # the ANN tier's serving face: the SQ8 top-k (the index is built
+    # on the warmup hit, so timed requests measure one TakeOrdered job
+    # plus the driver re-rank like any other endpoint)
     "/similar/3?k=10",
 ]
 

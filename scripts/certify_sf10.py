@@ -661,9 +661,9 @@ def verify_ivf_topk(pdf, ids, mn):
     out = {}
     # rp is record-only: its recall legitimately collapses on noise-
     # dominated corpora (rp_topk docstring — 0.48@refine=96 at sf1; the
-    # fixture regime), which is exactly why the ANN router exists. Its
+    # fixture regime), which is why SQ8 is the single-query path. Its
     # soundness (exact re-ranked cosines) IS gated.
-    # batch:<qid> rides the same IVF index at fixed probes over single
+    # batch:<qid> rides the same IVF cells at fixed probes over single
     # queries whose per-query recall legitimately spreads (recall_min 0.1
     # in ANN_RECALL_sf1.json) — record-only, like rp
     floors = {"ivf": 0.5, "sq8": 0.8, "rp": None}

@@ -1,10 +1,8 @@
-"""Regime-aware ANN routing (round-10): the r9 recall study measured
-SQ8 as the robust tier on noise-dominated corpora (recall@10 = 1.00 at
-4x compression where IVF needed 12/20 probes for 0.91) and IVF as the
-winner on well-separated corpora (0.93 at 2 probes). ann_topk_auto
-encodes that as the frame-level default via a sampled
-cell-concentration probe. These tests pin the router's decisions on
-both regimes and that the routed result equals the chosen tier's."""
+"""Single-query ANN top-k across corpus regimes. SQ8 (int8 code scan +
+exact re-rank) is the one single-query path: it must hold recall@10 on
+planted clusters, on pure noise and on every mix between, and honor k
+beyond 10. Also pins ivf_topk's input checks (probe count, zero-norm
+vectors)."""
 
 from __future__ import annotations
 
@@ -19,13 +17,13 @@ from tests.conftest import SF_DIR
 
 
 def _write_planted(
-    tmp_path, n=2000, d=32, k=8, signal=4.0, noise=0.5, noise_frac=0.0
+    tmp_path, n=2000, d=32, k=8, signal=4.0, noise=0.5, noise_frac=0.0,
+    zero_ids=(),
 ):
     """Well-separated corpus in the catalog's embeddings schema — the
     same recipe as scripts/ann_recall.py --planted, test-sized.
     ``noise_frac`` replaces that fraction of rows with pure unit noise
-    (label -1) — the mixed regime scripts/ann_router_sweep.py measures
-    at full scale."""
+    (label -1): the mixed regime between clustered and noise."""
     rng = np.random.default_rng(4242)
     centers = rng.normal(size=(k, d))
     centers /= np.linalg.norm(centers, axis=1, keepdims=True)
@@ -36,6 +34,7 @@ def _write_planted(
         vecs[is_noise] = rng.normal(size=(int(is_noise.sum()), d))
         labels[is_noise] = -1
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    vecs[list(zero_ids)] = 0.0
     emb = pa.FixedSizeListArray.from_arrays(
         pa.array(vecs.astype(np.float32).ravel(), type=pa.float32()), d
     ).cast(pa.list_(pa.float32()))
@@ -54,102 +53,48 @@ def _write_planted(
     return out
 
 
-def test_probe_routes_sq8_on_noise_corpus(spark):
-    from ct_clickhouse_spark.operators.similarity import ann_regime_probe
-
-    probe = ann_regime_probe(spark, SF_DIR)
-    # the fixture embeddings are noise-dominated by construction
-    # (2x center + 1x unit noise, gen_sf.py) — neighbors don't align
-    # with IVF cells, so pruning would cost recall: route = sq8
-    assert probe["route"] == "sq8"
-    assert probe["cell_recall_1probe"] < 0.6
-    # and the sample says MANY probes would be needed for target recall
-    assert probe["probes_for_target"] > 1
+def _exact_topk(m, qid, k=10):
+    sims = m @ m[qid]
+    sims[qid] = -np.inf
+    return set(np.lexsort((np.arange(len(m)), -sims))[:k].tolist())
 
 
-def test_probe_routes_ivf_on_planted_corpus(spark, tmp_path):
-    from ct_clickhouse_spark.operators.similarity import ann_regime_probe
+def _unit_rows(spark, corpus):
+    from ct_clickhouse_spark.catalog import load_table
 
-    planted = _write_planted(tmp_path)
-    probe = ann_regime_probe(spark, planted)
-    assert probe["route"] == "ivf"
-    assert probe["cell_recall_1probe"] >= 0.6
-    # clustered corpus: a small probe count reaches the target on the
-    # sample — the whole point of cell pruning
-    assert probe["probes_for_target"] <= probe["n_cells"] // 2
-
-
-def test_auto_matches_routed_tier_sq8(spark):
-    from ct_clickhouse_spark.operators.similarity import (
-        ann_topk_auto,
-        sq8_topk,
-    )
-
-    got = [
-        (r.vec_id, r.cosine) for r in ann_topk_auto(spark, SF_DIR).collect()
-    ]
-    want = [
-        (r.vec_id, r.cosine)
-        for r in sq8_topk(spark, SF_DIR)
-        .select("vec_id", "label", "cosine")
-        .collect()
-    ]
-    assert got == want and len(got) == 10
-
-
-def test_auto_matches_routed_tier_ivf(spark, tmp_path):
-    from ct_clickhouse_spark.operators.similarity import (
-        ann_regime_probe,
-        ann_topk_auto,
-        ivf_topk,
-    )
-
-    planted = _write_planted(tmp_path)
-    probe = ann_regime_probe(spark, planted)
-    assert probe["route"] == "ivf"
-    got = [
-        (r.vec_id, r.cosine) for r in ann_topk_auto(spark, planted).collect()
-    ]
-    want = [
-        (r.vec_id, r.cosine)
-        for r in ivf_topk(
-            spark, planted, n_probes=probe["probes_for_target"]
-        ).collect()
-    ]
-    assert got == want and len(got) == 10
+    rows = load_table(spark, corpus, "embeddings").collect()
+    m = np.array([r.embedding for r in sorted(rows, key=lambda r: r.vec_id)])
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
 
 
 def test_auto_recall_on_planted(spark, tmp_path):
-    """End-to-end: the routed IVF search on the clustered corpus must
-    actually find the true neighbors (recall@10 >= 0.9 vs exact)."""
-    from ct_clickhouse_spark.catalog import load_table
-    from ct_clickhouse_spark.operators.similarity import ann_topk_auto
+    """End-to-end: SQ8 on the clustered corpus must actually find the
+    true neighbors (recall@10 >= 0.9 vs exact)."""
+    from ct_clickhouse_spark.operators.similarity import sq8_topk
 
     planted = _write_planted(tmp_path)
-    rows = load_table(spark, planted, "embeddings").collect()
-    m = np.array([r.embedding for r in sorted(rows, key=lambda r: r.vec_id)])
-    m = m / np.linalg.norm(m, axis=1, keepdims=True)
-    sims = m @ m[0]
-    sims[0] = -np.inf
-    exact = set(np.argsort(-sims)[:10].tolist())
-    got = {r.vec_id for r in ann_topk_auto(spark, planted).collect()}
+    exact = _exact_topk(_unit_rows(spark, planted), 0)
+    got = {r.vec_id for r in sq8_topk(spark, planted).collect()}
     assert len(got & exact) >= 9
 
 
 def test_auto_k_gt_10_consistent_across_routes(spark, tmp_path):
     """ADVICE r10: ivf_topk used to hard-limit to TOPK=10 internally, so
-    ann_topk_auto(k=25) silently returned 10 rows on the IVF route but
-    25 on the SQ8 route. Both routes must honor k now."""
-    from ct_clickhouse_spark.operators.similarity import ann_topk_auto
+    a k=25 request silently returned 10 rows. Every single-query path
+    must honor k: SQ8 on the planted and the fixture corpus, and IVF on
+    the planted one."""
+    from ct_clickhouse_spark.operators.similarity import ivf_topk, sq8_topk
 
     planted = _write_planted(tmp_path)
-    ivf_rows = ann_topk_auto(spark, planted, k=25).collect()
-    assert len(ivf_rows) == 25
-    # descending cosine with vec_id tiebreak, no self-match
-    cosines = [r.cosine for r in ivf_rows]
-    assert cosines == sorted(cosines, reverse=True)
-    sq8_rows = ann_topk_auto(spark, SF_DIR, k=25).collect()
-    assert len(sq8_rows) == 25
+    for rows in (
+        sq8_topk(spark, planted, k=25).collect(),
+        ivf_topk(spark, planted, n_probes=3, k=25).collect(),
+        sq8_topk(spark, SF_DIR, k=25).collect(),
+    ):
+        assert len(rows) == 25
+        # descending cosine with vec_id tiebreak
+        keys = [(-r.cosine, r.vec_id) for r in rows]
+        assert keys == sorted(keys)
 
 
 def test_ivf_topk_rejects_zero_probes(spark, tmp_path):
@@ -162,64 +107,34 @@ def test_ivf_topk_rejects_zero_probes(spark, tmp_path):
         ivf_topk(spark, planted, n_probes=0)
 
 
-def test_probe_tiny_sample_no_self_match(spark, tmp_path):
-    """ADVICE r10: with sample <= k vectors, argsort over the -inf
-    diagonal row used to include the query among its own 'true
-    neighbors', inflating cell_recall_1probe. k is clamped to
-    len(sample)-1 now; a 1-vector sample errors."""
-    from ct_clickhouse_spark.operators.similarity import ann_regime_probe
+def test_ivf_topk_rejects_zero_norm_vectors(spark, tmp_path):
+    """A zero-norm embedding has no cosine. As the query (vec_id 0) it
+    used to give 10 rows of NULL cosines; as a corpus row it turned a
+    centroid into NaN and emptied the probed cells (query 3 got 0
+    rows). Both must raise ValueError naming the vec_id."""
+    from ct_clickhouse_spark.operators.similarity import ivf_topk
 
-    planted = _write_planted(tmp_path, n=6)
-    probe = ann_regime_probe(spark, planted, sample_n=6, k=10)
-    # 6 planted vectors over 8 centers: neighbors rarely share cells;
-    # the old bug pushed recall up via the self-match. All we pin is
-    # that the statistic is computed over 5 (= n-1) neighbors without
-    # crashing and stays a valid fraction.
-    assert 0.0 <= probe["cell_recall_1probe"] <= 1.0
-    assert probe["sample_n"] == 6
-
-    single = _write_planted(tmp_path / "one", n=1)
-    with pytest.raises(ValueError, match=">= 2 sample"):
-        ann_regime_probe(spark, single, sample_n=1, k=10)
-
-
-def test_drain_bench_validates_watermark_unit():
-    """ADVICE r10: '1 hour' used to KeyError at summary time AFTER the
-    multi-minute run; the unit map now covers hours and validates
-    up front."""
-    import scripts.bench_streaming as bs
-
-    assert bs._WATERMARK_UNIT_S["hour"] == 3600
-    assert bs._WATERMARK_UNIT_S["hours"] == 3600
-    with pytest.raises(ValueError, match="unsupported watermark unit"):
-        bs.bench_ingest_drain(None, watermark="1 fortnight")
+    corpus = _write_planted(tmp_path, zero_ids=(0,))
+    for qid in (0, 3):
+        with pytest.raises(ValueError, match=r"\b0 has zero norm"):
+            ivf_topk(spark, corpus, query_vec_id=qid).collect()
 
 
 @pytest.mark.parametrize("noise_frac", [0.0, 0.5, 1.0])
 def test_routed_recall_across_mixed_regimes(spark, tmp_path, noise_frac):
-    """Round-11 (r10 verdict #5): the 0.6 cell-recall threshold was
-    validated only on two corpora far from it; this pins the decision
-    QUALITY criterion across the regime axis — whatever tier the router
-    picks on a planted/mixed/noise corpus, routed end-to-end recall@10
-    must stay >= 0.9. The full-scale sweep (with the threshold-boundary
-    corpora) is scripts/ann_router_sweep.py -> ANN_ROUTER_r11.json."""
-    from ct_clickhouse_spark.catalog import load_table
-    from ct_clickhouse_spark.operators.similarity import ann_topk_auto
+    """Round-11 (r10 verdict #5): recall must hold across the regime
+    axis, not only at its ends — on a planted, half-noise and pure-noise
+    corpus, SQ8's end-to-end recall@10 must stay >= 0.9."""
+    from ct_clickhouse_spark.operators.similarity import sq8_topk
 
     corpus = _write_planted(tmp_path, noise_frac=noise_frac)
-    rows = load_table(spark, corpus, "embeddings").collect()
-    m = np.array([r.embedding for r in sorted(rows, key=lambda r: r.vec_id)])
-    m = m / np.linalg.norm(m, axis=1, keepdims=True)
+    m = _unit_rows(spark, corpus)
     n = len(m)
     recalls = []
     for qid in [0, n // 4, n // 2, 3 * n // 4, n - 1]:
-        sims = m @ m[qid]
-        sims[qid] = -np.inf
-        order = np.lexsort((np.arange(n), -sims))
-        exact = set(order[:10].tolist())
+        exact = _exact_topk(m, qid)
         got = {
-            r.vec_id
-            for r in ann_topk_auto(spark, corpus, query_vec_id=qid).collect()
+            r.vec_id for r in sq8_topk(spark, corpus, query_vec_id=qid).collect()
         }
         recalls.append(len(got & exact) / 10)
     assert float(np.mean(recalls)) >= 0.9, (noise_frac, recalls)

@@ -101,33 +101,20 @@ def test_query_vector_reresolves_after_rewrite(spark, emb_dir):
 
 
 def test_sq8_serving_index_reresolves_after_rewrite(spark, emb_dir):
-    from ct_clickhouse_spark.operators.similarity import _sq8_serving_index
+    from ct_clickhouse_spark.operators.similarity import _sq8_index
 
     import math
 
-    codes1, scales1 = _sq8_serving_index(spark, emb_dir)
+    codes1, scales1 = _sq8_index(spark, emb_dir)
     codes1.count()
     _write_embeddings(emb_dir, scale=10.0)
-    codes2, scales2 = _sq8_serving_index(spark, emb_dir)
+    codes2, scales2 = _sq8_index(spark, emb_dir)
     # normalized dim0 component: scale/sqrt(scale^2+1) -> 0.707 at 1x,
     # 0.995 at 10x — a stale cache keeps the old per-dim scale
     assert scales2[0] == pytest.approx(10.0 / math.sqrt(101.0), rel=1e-3), (
-        "stale _SQ8_SERVING_CACHE entry served after the embeddings "
-        "path changed"
+        "stale SQ8 index served after the embeddings path changed"
     )
     assert scales1[0] == pytest.approx(1.0 / math.sqrt(2.0), rel=1e-3)
-
-
-def test_sq8_cached_reresolves_after_rewrite(spark, emb_dir):
-    from ct_clickhouse_spark.operators.similarity import _sq8_cached
-
-    import math
-
-    _codes1, scales1 = _sq8_cached(spark, emb_dir)
-    assert scales1[0] == pytest.approx(1.0 / math.sqrt(2.0), rel=1e-3)
-    _write_embeddings(emb_dir, scale=10.0)
-    _codes2, scales2 = _sq8_cached(spark, emb_dir)
-    assert scales2[0] == pytest.approx(10.0 / math.sqrt(101.0), rel=1e-3)
 
 
 def _qvec_map(spark, emb_dir):

@@ -1,6 +1,6 @@
-"""Persisted IVF index: probe equals the per-call ivf_topk (same trained
-quantizer, built once), and the probe scan physically reads ONLY the
-probed cluster partitions (partition pruning — the 100 TB point)."""
+"""Batched IVF search: one distributed pass over many queries must give
+each query the per-call ivf_topk answer (same trained quantizer, same
+home-cell assignment, same tiebreak)."""
 
 from __future__ import annotations
 
@@ -10,81 +10,9 @@ from ct_clickhouse_spark.catalog import load_table
 from ct_clickhouse_spark.operators.similarity import (
     IVF_PROBES,
     QUERY_VEC_ID,
-    ivf_build,
-    ivf_probe,
     ivf_topk,
 )
 from tests.conftest import SF_DIR
-
-
-def _query_vec(spark):
-    return (
-        load_table(spark, SF_DIR, "embeddings")
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .collect()[0]
-        .embedding
-    )
-
-
-def test_probe_matches_per_call_ivf(spark, tmp_path):
-    idx = str(tmp_path / "ivf")
-    ivf_build(spark, SF_DIR, idx)
-    got = [
-        (r.vec_id, r.cosine)
-        for r in ivf_probe(spark, idx, _query_vec(spark)).collect()
-    ]
-    # exclude the query vector itself like ivf_topk does
-    got = [(v, c) for v, c in got if v != QUERY_VEC_ID][:10]
-    want = [(r.vec_id, r.cosine) for r in ivf_topk(spark, SF_DIR).collect()][: len(got)]
-    assert got == want and len(got) > 0
-
-
-def test_probe_reads_only_probed_partitions(spark, tmp_path):
-    idx = str(tmp_path / "ivf")
-    ivf_build(spark, SF_DIR, idx)
-    probe_df = ivf_probe(spark, idx, _query_vec(spark))
-    # the cluster predicate must prune at planning time: it appears as a
-    # PartitionFilter on the file scan (not a post-scan Filter)
-    plan = probe_df._jdf.queryExecution().executedPlan().toString()
-    pf = [line for line in plan.split("\n") if "PartitionFilters" in line]
-    assert pf and "cluster" in pf[0], plan[:1500]
-    # and the probed subset is a strict subset of the index
-    probed_rows = (
-        spark.read.parquet(idx + "/vectors")
-        .filter(F.col("cluster").isin(list(range(IVF_PROBES))))  # any 2 clusters
-        .count()
-    )
-    total_rows = spark.read.parquet(idx + "/vectors").count()
-    assert 0 < probed_rows < total_rows
-
-
-def test_ivf_topk_indexed_equals_per_call_ivf(spark):
-    """The driver slot's build-once indexed search must return the same
-    (vec_id, cosine) rows as the per-call ivf_topk (same trained
-    quantizer, query excluded), and a second call must reuse the index."""
-    import os
-
-    import pytest
-
-    from ct_clickhouse_spark import artifacts
-    from ct_clickhouse_spark.catalog import table_path
-    from ct_clickhouse_spark.operators.similarity import ivf_topk_indexed
-
-    def index_path():
-        return artifacts.get_or_build(
-            spark,
-            "ivf_index",
-            SF_DIR,
-            lambda: pytest.fail("no IVF index entry in the registry"),
-            deps=[table_path(SF_DIR, "embeddings")],
-        )
-
-    got = [(r.vec_id, r.cosine) for r in ivf_topk_indexed(spark, SF_DIR).collect()]
-    want = [(r.vec_id, r.cosine) for r in ivf_topk(spark, SF_DIR).collect()]
-    assert got == want and got
-    first = index_path()
-    ivf_topk_indexed(spark, SF_DIR).collect()
-    assert index_path() == first and os.path.isdir(first)  # reused, not rebuilt
 
 
 def test_batch_topk_single_query_equals_ivf_topk(spark):

@@ -116,10 +116,17 @@ def sim_client(spark, table_path):
     return app.test_client()
 
 
-def test_similar_routed_topk(sim_client):
-    """Round-11: /similar/<vec_id> is ann_topk_auto's serving face."""
+def test_similar_routed_topk(spark, sim_client):
+    """/similar/<vec_id> serves the SQ8 top-k: the same rows sq8_topk
+    returns for that query and k."""
+    from ct_clickhouse_spark.operators.similarity import sq8_topk
+
     rows = json.loads(sim_client.get("/similar/3?k=5").data)
     assert len(rows) == 5
+    assert rows == [
+        [r.vec_id, r.label, r.cosine]
+        for r in sq8_topk(spark, SF_DIR, k=5, query_vec_id=3).collect()
+    ]
     # (vec_id, label, cosine), descending cosine, never the query itself
     assert all(len(r) == 3 for r in rows)
     assert all(r[0] != 3 for r in rows)

@@ -1,10 +1,9 @@
-"""sq8_topk_serving must be ROW-IDENTICAL to sq8_topk (r11 verdict #6:
-the /similar serving floor). The serving twin collapses the two-job
-shape (approx TakeOrdered + distributed re-rank) into one job plus a
-driver-side exact re-rank; identity holds only if the driver arithmetic
-is bit-compatible with the in-plan expressions — left-to-right fold
-order, IEEE sqrt, and Spark's HALF_UP round — so these tests sweep
-query ids and pin full-row equality including the cosine doubles."""
+"""The SQ8 top-k is one path: one TakeOrdered job over the codes-plus-
+payload index, then the exact re-rank of the candidates on the driver.
+Its cosines match Spark's in-plan arithmetic only if the driver side is
+bit-compatible with it — left-to-right fold order, IEEE sqrt, and
+Spark's HALF_UP round — so these tests pin the rounding and the k
+contract of that single path."""
 
 from __future__ import annotations
 
@@ -17,17 +16,14 @@ def _rows(df):
     return [(r.vec_id, r.label, r.cosine) for r in df.collect()]
 
 
-def test_serving_twin_row_identical_across_queries(spark):
-    for qid in (0, 3, 17, 41, 123):
-        a = _rows(similarity.sq8_topk(spark, SF_DIR, query_vec_id=qid))
-        b = _rows(similarity.sq8_topk_serving(spark, SF_DIR, query_vec_id=qid))
-        assert a == b and len(a) == 10, qid
-
-
 def test_serving_twin_respects_k(spark):
-    b = _rows(similarity.sq8_topk_serving(spark, SF_DIR, k=3, query_vec_id=7))
+    """k=3 is the first 3 rows of k=10, and the DataFrame wrapper
+    carries the driver tuples unchanged."""
+    head = similarity.sq8_topk_rows(spark, SF_DIR, k=3, query_vec_id=7)
     full = _rows(similarity.sq8_topk(spark, SF_DIR, k=10, query_vec_id=7))
-    assert b == full[:3]
+    assert len(full) == 10
+    assert full == similarity.sq8_topk_rows(spark, SF_DIR, k=10, query_vec_id=7)
+    assert head == full[:3]
 
 
 def test_round_half_up_matches_spark_round(spark):
@@ -42,9 +38,3 @@ def test_round_half_up_matches_spark_round(spark):
     got = [r.r for r in df.collect()]
     want = [similarity._round_half_up4(v) for v in vals]
     assert got == want
-
-
-def test_auto_serving_routes_row_identical(spark):
-    a = _rows(similarity.ann_topk_auto(spark, SF_DIR, query_vec_id=3))
-    b = _rows(similarity.ann_topk_auto(spark, SF_DIR, query_vec_id=3, serving=True))
-    assert a == b

@@ -257,3 +257,15 @@ def test_dedup_state_retention_two_delay_law(spark, tmp_path):
         f"state plateau {plateau:.0f} rows = {horizon_ev_s:.1f} ev-s "
         f"horizon; expected ~2x the {delay_s} s delay"
     )
+
+
+def test_drain_bench_validates_watermark_unit():
+    """ADVICE r10: '1 hour' used to KeyError at summary time AFTER the
+    multi-minute run; the unit map now covers hours and validates
+    up front."""
+    import scripts.bench_streaming as bs
+
+    assert bs._WATERMARK_UNIT_S["hour"] == 3600
+    assert bs._WATERMARK_UNIT_S["hours"] == 3600
+    with pytest.raises(ValueError, match="unsupported watermark unit"):
+        bs.bench_ingest_drain(None, watermark="1 fortnight")
